@@ -19,31 +19,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // staged artifacts ride the cross-invocation StageCache (r17,
-    // VERDICT r16 item 2b): a second bench in the same sandbox reuses
-    // them — staging collapses to parquet reads, and the per-tier
-    // "cache" field below makes a slow staging number self-adjudicating
-    // (hits can only be IO/contention, never rebuild regressions)
-    graft.operators.StageCache.enableDefault()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
     val runs = sys.env.get("SPARK_GRAFT_RUNS").map(_.toInt).getOrElse(2).max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // r19: the suite runs 180 distinct queries x N runs; each compiles
-      // ~5-10 whole-stage-codegen classes, so the default 100-entry
-      // Janino class cache thrashes and even a query's SECOND run
-      // recompiles every generated class. Scale-neutral (the cache holds
-      // compiled classes, a few MB of driver metaspace); any production
-      // driver serving a diverse query mix wants the same headroom.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     // job-count probe: incremented on every job start; snapshotted
     // around each timed run so the artifact shows action counts
     val jobCounter = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -75,6 +52,10 @@ object Bench {
       // voluntary releases; treat it as inconclusive, not clean.
       val removed = new AtomicLong(0L)
       val unpersist = new AtomicLong(0L) // unpersistRDD events (explicit + cleaner)
+      // artifact names of snapshot()'s fields, in order
+      val metricFields = Seq("shuffle_read_mb", "shuffle_write_mb",
+        "spill_mem_mb", "spill_disk_mb", "gc_ms", "evicted_blocks",
+        "removed_blocks", "unpersist_rdds")
       def snapshot(): Array[Long] = {
         org.apache.spark.GraftCoreBridge.drainListenerBus(spark.sparkContext)
         Array(shufR.get, shufW.get, spillM.get, spillD.get, gcMs.get,
@@ -298,21 +279,13 @@ object Bench {
             "band_index" -> (() => {
               graft.dedup.BandIndex.stagedBaseIndex(spark, sfDir); ()
             })))
-        // r19: default = ALL chains in flight (6). The guide's §2.6
-        // "2-3 jobs" sizing is for jobs that saturate the cluster;
-        // these tiers alternate driver-side single-threaded work with
-        // short bursts, so at PAR=3 two long chains queued behind each
-        // other and the phase wall measured 28.3 s vs 14.7 s at
-        // PAR=6 (cold, quiet, sf0.1/32 cores — see OPTIMIZATION_r19).
-        // The FIFO scheduler back-fills either way; the knob stays
-        // env-overridable (SPARK_GRAFT_STAGE_PAR=1 restores strictly
-        // sequential tiers for A/B measurement).
-        // tolerant parse (ADVICE r18): a stray non-numeric value must
-        // not crash the bench before any measurement runs
-        val stagePar = sys.env.get("SPARK_GRAFT_STAGE_PAR")
-          .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
-          .getOrElse(chains.size).max(1)
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(stagePar,
+        // r19: ALL chains in flight (6). The guide's §2.6 "2-3 jobs"
+        // sizing is for jobs that saturate the cluster; these tiers
+        // alternate driver-side single-threaded work with short bursts,
+        // so at 3 threads two long chains queued behind each other and
+        // the phase wall measured 28.3 s vs 14.7 s at 6 (cold, quiet,
+        // sf0.1/32 cores — see OPTIMIZATION_r19).
+        val pool = java.util.concurrent.Executors.newFixedThreadPool(chains.size,
           r => { val t = new Thread(r, "graft-staging"); t.setDaemon(true); t })
         try {
           val futs = chains.map(chain => pool.submit(
@@ -328,7 +301,8 @@ object Bench {
             // never silently drop an event for a cache entry no tier
             // claims — surface it as a zero-cost synthetic tier
             (if (events.contains("(unattributed)"))
-               Seq(TierRec("(unattributed)", 0.0, None, Array.fill(8)(0L), ""))
+               Seq(TierRec("(unattributed)", 0.0, None,
+                 Array.fill(M.metricFields.size)(0L), ""))
              else Nil)
           ordered.map { r =>
             val cache = events.getOrElse(r.name, Seq.empty)
@@ -339,19 +313,6 @@ object Bench {
         } finally pool.shutdown()
       }
     val stagingWallSec = (System.nanoTime() - stagingT0) / 1e9
-    // dev-only staging A/B loop (driver never sets it; unset = no
-    // behavior change): print the staging phase wall + per-tier spans
-    // and exit before the query phase, so staging-chain experiments
-    // don't pay 180 queries per data point
-    if (sys.env.contains("SPARK_GRAFT_STAGE_ONLY")) {
-      val tiers = staging.map { case (k, v, err, _, _) =>
-        s""""$k":${String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))}${err.map(e => s""","${k}_err":true""").getOrElse("")}"""
-      }.mkString("{", ",", "}")
-      println(s"""{"staging_sec":${String.format(java.util.Locale.ROOT, "%.3f", Double.box(stagingWallSec))},"tiers":$tiers}""")
-      System.out.flush()
-      try spark.stop() catch { case _: Throwable => () }
-      System.exit(0)
-    }
     // truncate without splitting a surrogate pair: a dangling high
     // surrogate would make the JSON string invalid for strict parsers
     def safeTake(s: String, n: Int): String = {
@@ -365,7 +326,7 @@ object Bench {
     // whichever absorbed residual session effects — and the artifact
     // could not show it. The order is recorded in the emitted line.
     // one timed execution: wall, job count, error, and the executor-
-    // metric delta over the run (field order = metricFields below)
+    // metric delta over the run (field order = M.metricFields)
     final case class Run(sec: Double, jobs: Long, err: Option[String], m: Array[Long])
     def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : Run = {
@@ -445,11 +406,8 @@ object Bench {
       s"\"" + k + "\":" + all.map(r => r3(r.sec)).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     // per-run executor metrics (full artifact only): each query maps to
-    // an array of per-run records, record field order = metricFields.
+    // an array of per-run records, record field order = M.metricFields.
     // Byte fields are MB (1 decimal), gc is ms, block fields are counts.
-    val metricFields = Seq("shuffle_read_mb", "shuffle_write_mb",
-      "spill_mem_mb", "spill_disk_mb", "gc_ms", "evicted_blocks",
-      "removed_blocks", "unpersist_rdds")
     def metricRec(m: Array[Long]): String = {
       val mb = m.take(4).map(b => r1(b / 1048576.0))
       (mb ++ m.drop(4).map(_.toString)).mkString("[", ",", "]")
@@ -488,7 +446,7 @@ object Bench {
     val fingerprint =
       try graft.operators.StageCache.fingerprint(sfDir)
       catch { case _: Throwable => "unavailable" }
-    val mfJson = metricFields.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val mfJson = M.metricFields.map("\"" + _ + "\"").mkString("[", ",", "]")
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"jobs":$js,"runs_all":$ra,"exec_metric_fields":$mfJson,"exec_metrics":$em,"order":$orderJson,"staging":$stagingJson,"staging_sec":${r3(stagingSec)},"staging_tier_sum_sec":${r3(stagingTierSum)},"runs":$runs,"errors":$errCount,"sf":"$sfDir","testdata_fingerprint":"$fingerprint"}"""
     // The full line (~5 KB at 95 queries) overflows the driver's stdout

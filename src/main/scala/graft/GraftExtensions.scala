@@ -5,12 +5,11 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-/** Session extensions registering graft's native expressions for SQL use:
+/** Session extensions registering graft's native expressions for SQL
+  * use ([[GraftSession]] registers them for every graft main):
   *
   * {{{
-  *   SparkSession.builder()
-  *     .config("spark.sql.extensions", "graft.GraftExtensions")
-  *     ...
+  *   builder.config("spark.sql.extensions", "graft.GraftExtensions")
   *   spark.sql("SELECT cosine_sim(a.embedding, b.embedding) ...")
   * }}}
   *

@@ -1,0 +1,43 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+
+/** The one engine every graft main runs on (Bench, Verify, PlanDump,
+  * JobTrace): a dev tool that measured a differently-configured session
+  * would explain a different engine from the one the bench and the
+  * oracle gate grade.
+  *
+  *  - `local[SPARK_GRAFT_CPUS]`, default every core of the host, with
+  *    one shuffle partition per core;
+  *  - UTC session time zone, AQE on, [[GraftExtensions]] registered,
+  *    UI off, log level WARN;
+  *  - the Janino codegen class cache sized to 5000 entries (r19): the
+  *    suite runs 180 distinct queries x N runs, each compiling ~5-10
+  *    whole-stage-codegen classes, so the default 100-entry cache
+  *    thrashes and even a query's SECOND run recompiles every generated
+  *    class. Scale-neutral (the cache holds compiled classes, a few MB
+  *    of driver metaspace); any production driver serving a diverse
+  *    query mix wants the same headroom;
+  *  - staged artifacts ride the cross-invocation
+  *    [[graft.operators.StageCache]] (keyed by dataset + code
+  *    fingerprint, so a stale hit is impossible by construction).
+  */
+object GraftSession {
+
+  def apply(): SparkSession = {
+    graft.operators.StageCache.enableDefault()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors().toString)
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "5000")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+}

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: run one declared query and print every Spark job it
   * submits — description/call site, wall, stage/task counts — so a
@@ -16,17 +15,7 @@ object JobTrace {
     val name = args.headOption.getOrElse(sys.error("usage: JobTrace <query> [runs]"))
     val runs = args.lift(1).map(_.toInt).getOrElse(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.operators.StageCache.enableDefault()
+    val spark = GraftSession()
 
     final case class J(id: Int, t0: Long, desc: String, site: String,
                        stages: Int, tasks: Int)

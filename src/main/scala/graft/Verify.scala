@@ -1,28 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    // gate main: staged artifacts may be served from / written to the
-    // cross-invocation StageCache (keyed by dataset + code fingerprint,
-    // so a stale hit is impossible by construction)
-    graft.operators.StageCache.enableDefault()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // 180 distinct queries x ~5-10 generated classes each — see the
-      // Bench session conf for the sizing rationale (r19)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     // optional dev filter: SPARK_GRAFT_ONLY=name1,name2 (driver never sets it)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)

@@ -313,45 +313,13 @@ object AvroCodec {
   /** Decode a CP1-framed binary column into typed columns + an `err`
     * column (`null` on success; the reference counts these failures,
     * `src/main.cpp:247-251`). Passthrough columns are preserved.
+    * Single-schema topic: every frame id is read with `schemaJson`, so
+    * this path never emits `unknown_schema_id`.
     */
   def decode(df: DataFrame, valueCol: String, schemaJson: String,
              passthrough: Seq[String] = Nil): DataFrame = {
-    val structType = toStructType(schemaJson)
-    val inSchema = df.schema
-    val valIdx = inSchema.fieldIndex(valueCol)
-    val passIdx = passthrough.map(inSchema.fieldIndex)
-    val outSchema = StructType(
-      passthrough.map(inSchema(_)) ++
-        structType.fields.map(_.copy(nullable = true)) :+
-        StructField("err", StringType, nullable = true))
-    val nFields = structType.fields.length
-    df.mapPartitions { iter =>
-      val schema = new Schema.Parser().parse(schemaJson)
-      val reader = new GenericDatumReader[GenericRecord](schema)
-      val convs = fromAvroConvs(schema)
-      var decoder: BinaryDecoder = null
-      var rec: GenericRecord = null
-      iter.map { row =>
-        val pass = passIdx.map(row.get)
-        val bytes = row.getAs[Array[Byte]](valIdx)
-        ConfluentFraming.unframe(bytes) match {
-          case ConfluentFraming.Framed(_, b, off, len) =>
-            try {
-              decoder = DecoderFactory.get().binaryDecoder(b, off, len, decoder)
-              rec = reader.read(rec, decoder)
-              val vals = (0 until nFields).map(i => convs(i)(rec.get(i)))
-              Row.fromSeq(pass ++ vals :+ null)
-            } catch {
-              case e: Exception =>
-                Row.fromSeq(pass ++ Seq.fill[Any](nFields)(null) :+ s"decode_error:${e.getClass.getSimpleName}")
-            }
-          case ConfluentFraming.BadMagic =>
-            Row.fromSeq(pass ++ Seq.fill[Any](nFields)(null) :+ "bad_magic")
-          case ConfluentFraming.Truncated =>
-            Row.fromSeq(pass ++ Seq.fill[Any](nFields)(null) :+ "truncated")
-        }
-      }
-    }(Encoders.row(outSchema))
+    val writer = Some(schemaJson)
+    decodeFrames(df, valueCol, _ => writer, schemaJson, passthrough)
   }
 
   /** Schema-evolution decode: each CP1 frame's id selects its WRITER
@@ -366,7 +334,15 @@ object AvroCodec {
     */
   def decodeMulti(df: DataFrame, valueCol: String,
                   writerSchemas: Map[Int, String], readerSchemaJson: String,
-                  passthrough: Seq[String] = Nil): DataFrame = {
+                  passthrough: Seq[String] = Nil): DataFrame =
+    decodeFrames(df, valueCol, writerSchemas.get, readerSchemaJson, passthrough)
+
+  /** The one per-partition decode kernel behind [[decode]] and
+    * [[decodeMulti]]: `writerFor` maps a frame's schema id to its writer
+    * schema JSON (None = `unknown_schema_id`). */
+  private def decodeFrames(df: DataFrame, valueCol: String,
+                           writerFor: Int => Option[String], readerSchemaJson: String,
+                           passthrough: Seq[String]): DataFrame = {
     val structType = toStructType(readerSchemaJson)
     val inSchema = df.schema
     val valIdx = inSchema.fieldIndex(valueCol)
@@ -379,8 +355,9 @@ object AvroCodec {
     df.mapPartitions { iter =>
       val readerSchema = new Schema.Parser().parse(readerSchemaJson)
       val convs = fromAvroConvs(readerSchema)
-      // one resolving reader per writer id, built lazily per partition
-      val readers = scala.collection.mutable.Map.empty[Int, GenericDatumReader[GenericRecord]]
+      // one resolving reader per distinct writer schema, built lazily
+      // per partition
+      val readers = scala.collection.mutable.Map.empty[String, GenericDatumReader[GenericRecord]]
       var decoder: BinaryDecoder = null
       var rec: GenericRecord = null
       iter.map { row =>
@@ -388,12 +365,12 @@ object AvroCodec {
         val bytes = row.getAs[Array[Byte]](valIdx)
         ConfluentFraming.unframe(bytes) match {
           case ConfluentFraming.Framed(id, b, off, len) =>
-            writerSchemas.get(id) match {
+            writerFor(id) match {
               case None =>
                 Row.fromSeq(pass ++ Seq.fill[Any](nFields)(null) :+ s"unknown_schema_id:$id")
               case Some(writerJson) =>
                 try {
-                  val reader = readers.getOrElseUpdate(id,
+                  val reader = readers.getOrElseUpdate(writerJson,
                     new GenericDatumReader[GenericRecord](
                       new Schema.Parser().parse(writerJson), readerSchema))
                   decoder = DecoderFactory.get().binaryDecoder(b, off, len, decoder)

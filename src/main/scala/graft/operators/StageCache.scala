@@ -55,8 +55,8 @@ object StageCache {
 
   /** Cache root; None = caching disabled. OPT-IN: nothing is cached
     * unless the `GRAFT_STAGE_CACHE` env / `graft.stage.cache` sysprop
-    * names a root or an entry point called [[enableDefault]] — the
-    * gate mains (Verify/Bench/DevProbe) do, the shared TEST JVM does
+    * names a root or an entry point called [[enableDefault]] — every
+    * main does (through [[graft.GraftSession]]), the shared TEST JVM does
     * not (suites run in parallel and must not observe, or race on,
     * each other's cache roots; StageCacheSpec passes an explicit root
     * through the package-private overloads instead). */

@@ -182,21 +182,21 @@ object VectorIndex {
 
   /** The frozen MIPS augmentation constant, present iff the index was
     * built by [[buildMips]]. One row; its absence IS the IVF/MIPS
-    * dispatch bit [[append]] keys on. Probed by READING, not
-    * `File.exists` (ADVICE r14): an existence check through
-    * `java.io.File` is local-FS-only, and a MIPS index on HDFS/S3
-    * would silently dispatch as plain IVF — the exact silent-mix bug
-    * the marker exists to prevent. Only the path-missing error class
-    * maps to None; a corrupt or unreadable marker still throws. */
+    * dispatch bit [[append]] keys on. Presence is probed through the
+    * Hadoop FileSystem API ([[graft.operators.IndexFs.exists]]), not
+    * `java.io.File` (ADVICE r14): a local-FS-only check would make a
+    * MIPS index on HDFS/S3 silently dispatch as plain IVF — the exact
+    * silent-mix bug the marker exists to prevent. An absent marker is
+    * None without an exception; a present but corrupt or unreadable
+    * marker still throws. */
   private[graft] def loadMipsM2(s: SparkSession, indexDir: String): Option[Double] =
     mipsM2Memo.computeIfAbsent(
       (s, graft.operators.ServingSnapshot.qualified(indexDir)),
-      _ =>
-        try Some(s.read.parquet(s"$indexDir/mips_m2").collect()(0).getDouble(0))
-        catch {
-          case e: org.apache.spark.sql.AnalysisException
-              if e.getCondition == "PATH_NOT_FOUND" => None
-        })
+      _ => {
+        val marker = s"$indexDir/mips_m2"
+        if (!graft.operators.IndexFs.exists(marker)) None
+        else Some(s.read.parquet(marker).collect()(0).getDouble(0))
+      })
 
   /** Fold new vectors INTO an existing index under its FROZEN
     * quantizer — the ingest loop's growth step (see

@@ -3,16 +3,19 @@ package graft.streaming
 import graft.operators.IndexFs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Production-shaped graph sink: the durable sibling of the in-memory
-  * [[SpoGraphSink]] stand-in, persisting each micro-batch of decoded
-  * SPO triples to a parquet table — the Spark placement of the
+/** The reference's persistence stage as a streaming graph sink: a
+  * `foreachBatch` body persisting each micro-batch of decoded SPO
+  * triples to a parquet table — the Spark placement of the
   * reference's Postgres store (`/root/reference/src/Database.cpp`
   * `insert_object`/`insert_relationship`), with the row-at-a-time
   * prepared-statement upserts re-expressed as set-oriented writes.
   *
-  * Idempotence (foreachBatch is at-least-once) is structural, not
-  * state-held, so it SURVIVES DRIVER RESTARTS — the in-memory sink's
-  * `lastAppliedBatchId` field does not:
+  * Idempotence: foreachBatch delivers micro-batches at-least-once (a
+  * batch is replayed after a failure between sink commit and
+  * checkpoint commit), so an append-only merge would append a replayed
+  * batch twice and inflate edge weights. The guard here is structural,
+  * not a driver-memory `lastAppliedBatchId`, so it SURVIVES DRIVER
+  * RESTARTS:
   *
   *  - each batch writes to its own `batch_id=<id>` directory in
   *    OVERWRITE mode, so a replayed batch replaces its own previous
@@ -51,8 +54,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * A real lakehouse deployment would swap this for a Delta/Iceberg
   * `MERGE` keyed by `txnAppId`/`txnVersion` — same contract, ACID
   * visibility for concurrent readers on top. Readers here materialize
-  * the graph through the SAME batch TripleStore logic the in-memory
-  * sink uses, so streamed and batch graphs agree by construction.
+  * the graph through the SAME batch TripleStore logic as the batch
+  * surface, so streamed and batch graphs agree by construction.
   */
 final class ParquetGraphSink(tablePath: String) extends Serializable {
 

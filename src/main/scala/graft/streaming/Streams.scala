@@ -46,55 +46,6 @@ object WindowedAggregator {
         col("n_events"), col("total_value"))
 }
 
-/** The reference's persistence stage (`Database::insert_object` /
-  * `insert_relationship`, `src/KafkaConsumerCallback.cpp:88-108`) as a
-  * streaming sink: each micro-batch of decoded SPO triples is merged
-  * into the graph store via `foreachBatch`. Here the store is an
-  * in-memory accumulator (this container has no external DB); in
-  * production the same `merge` body targets Delta/JDBC with the
-  * identical upsert semantics — dedup objects by name, append edges.
-  *
-  * Idempotence requirement: `foreachBatch` delivers micro-batches
-  * at-least-once (a batch is replayed after a failure between sink
-  * commit and checkpoint commit), so an append-only merge MUST track
-  * the last applied batchId and skip replays — otherwise a replayed
-  * batch appends its triples twice and inflates edge weights. The
-  * production Delta/JDBC variant needs the same guard (a `txnVersion`/
-  * applied-batch table) unless its merge is keyed to be naturally
-  * idempotent.
-  */
-final class SpoGraphSink extends Serializable {
-  import scala.collection.mutable
-
-  private val lock = new Object
-  private val triples = mutable.ArrayBuffer[(String, String, String, Long)]()
-  private var lastAppliedBatchId: Long = -1L
-
-  /** foreachBatch body: fold a micro-batch of (subject, predicate,
-    * object, ts_us) rows into the store. Skips batchIds at or below the
-    * last applied one, making replays (at-least-once delivery) no-ops. */
-  def merge(batch: DataFrame, batchId: Long): Unit = {
-    val rows = batch.select("subject", "predicate", "object", "ts_us").collect()
-    lock.synchronized {
-      if (batchId > lastAppliedBatchId) {
-        rows.foreach(r => triples += ((r.getString(0), r.getString(1), r.getString(2), r.getLong(3))))
-        lastAppliedBatchId = batchId
-      }
-    }
-  }
-
-  /** Materialize the graph accumulated so far (objects + edges), using
-    * the same batch TripleStore logic — streaming and batch agree by
-    * construction. */
-  def graph(spark: org.apache.spark.sql.SparkSession): (DataFrame, DataFrame) = {
-    import spark.implicits._
-    val t = lock.synchronized { triples.toSeq }
-      .toDF("subject", "predicate", "object", "ts_us")
-    val objs = graft.graph.TripleStore.objects(t)
-    (objs, graft.graph.TripleStore.relationships(t, objs))
-  }
-}
-
 /** Streaming deduplication (the streaming face of §2.4's exact dedup):
   * `dropDuplicatesWithinWatermark` keyed on a content fingerprint. State
   * is bounded by the watermark delay — keys older than the watermark are
@@ -618,7 +569,7 @@ object StreamJoin {
 /** Streaming, incrementally-maintained SPO graph statistics — the
   * streaming face of §2.2's batch graph queries. Triples are deduped
   * within the watermark (a replayed or re-sent triple must not inflate
-  * degrees — the same at-least-once discipline as [[SpoGraphSink]]),
+  * degrees — the same at-least-once discipline as [[ParquetGraphSink]]),
   * then degree counts update per micro-batch in update output mode:
   * state is one counter per entity, hash-partitioned across executors,
   * and each batch touches only the keys it saw.

@@ -451,9 +451,9 @@ object TermIndex {
     * dense ceiling by a full quantum before pruning is provably safe. */
   private val MaxScoreQuantum = 1e-6
 
-  /** Probe-count telemetry for the max-score branch (spec + DevProbe
-    * visibility — the branch decision is otherwise invisible from the
-    * returned frame). */
+  /** Probe-count telemetry for the max-score branch (spec visibility —
+    * the branch decision is otherwise invisible from the returned
+    * frame). */
   private[graft] val maxScorePruned = new java.util.concurrent.atomic.AtomicLong
   private[graft] val maxScoreFellBack = new java.util.concurrent.atomic.AtomicLong
 

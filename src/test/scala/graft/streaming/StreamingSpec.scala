@@ -69,7 +69,8 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
       input.toDF().toDF("ts_us", "value"), "value", AvroQueries.SpoSchemaJson,
       passthrough = Seq("ts_us"))
       .filter(col("err").isNull)
-    val sink = new SpoGraphSink
+    val tablePath = java.nio.file.Files.createTempDirectory("graft_loop").toString
+    val sink = new ParquetGraphSink(tablePath)
     val q = decoded.writeStream.foreachBatch(sink.merge _).start()
     try {
       // two micro-batches, like a consumer polling twice
@@ -84,7 +85,10 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
       val batchEdges = graft.SparkEntry.queries("spo_relationships")(spark, dir).collect().toSeq
       assert(objs.orderBy("object_id").collect().toSeq == batchObjs)
       assert(edges.orderBy("source_id", "target_id", "predicate").collect().toSeq == batchEdges)
-    } finally q.stop()
+    } finally {
+      q.stop()
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tablePath))
+    }
   }
 
   test("streaming sessionization agrees with the batch sessionizer on real data") {
@@ -270,15 +274,17 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     } finally q.stop()
   }
 
-  test("replayed micro-batch does not double-count in SpoGraphSink") {
-    implicit val sqlCtx = spark.sqlContext
+  test("replayed micro-batch does not double-count in ParquetGraphSink") {
     import spark.implicits._
-    val sink = new SpoGraphSink
-    val batch = Seq(("a", "p", "b", 1L)).toDF("subject", "predicate", "object", "ts_us")
-    sink.merge(batch, 0L)
-    sink.merge(batch, 0L) // at-least-once replay of the same batchId
-    val (_, edges) = sink.graph(spark)
-    assert(edges.collect().map(_.getLong(3)).toSeq == Seq(1L))
+    val tablePath = java.nio.file.Files.createTempDirectory("graft_replay").toString
+    try {
+      val sink = new ParquetGraphSink(tablePath)
+      val batch = Seq(("a", "p", "b", 1L)).toDF("subject", "predicate", "object", "ts_us")
+      sink.merge(batch, 0L)
+      sink.merge(batch, 0L) // at-least-once replay of the same batchId
+      val (_, edges) = sink.graph(spark)
+      assert(edges.collect().map(_.getLong(3)).toSeq == Seq(1L))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tablePath))
   }
 
   test("continuous pipeline: file topic -> evolving decode -> graph sink") {
@@ -324,7 +330,9 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     val decoded = AvroCodec.decodeMulti(stream, "value", registry.snapshot, spoV2,
       passthrough = Seq("ts_us"))
       .filter(org.apache.spark.sql.functions.col("err").isNull)
-    val sink = new SpoGraphSink
+    // outside the watched dir: the file source lists it recursively
+    val sink = new ParquetGraphSink(
+      java.nio.file.Files.createTempDirectory("graft_topic_graph").toString)
     val q = decoded.select("subject", "predicate", "object", "ts_us")
       .writeStream.foreachBatch(sink.merge _).start()
     try {
