@@ -2,7 +2,7 @@ package graft.avro
 
 import java.io.ByteArrayOutputStream
 
-import org.apache.avro.Schema
+import org.apache.avro.{Schema, SystemLimitException}
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
 import org.apache.avro.io.{BinaryDecoder, BinaryEncoder, DecoderFactory, EncoderFactory}
 import org.apache.avro.util.Utf8
@@ -24,6 +24,41 @@ import scala.jdk.CollectionConverters._
   * partition-level reuse is the fastest JVM shape for it.
   */
 object AvroCodec {
+
+  /** Most bytes a decoded string or bytes field, and most items an array
+    * or map, may claim. avro sizes each buffer from the length prefix
+    * BEFORE it reads the body, so a hostile ~2 GB prefix behind a valid
+    * CP1 header would allocate 2 GB and kill the executor with an
+    * OutOfMemoryError instead of counting a `decode_error`. A frame
+    * cannot hold a field longer than itself, and a Kafka record is at
+    * most the broker's `message.max.bytes` (1 MiB by default), so 8 MiB
+    * rejects no record a default-configured topic can carry, leaves 8×
+    * headroom for raised broker limits, and bounds what one hostile
+    * frame allocates before it fails. */
+  private[avro] val MaxFieldLength: Int = 8 << 20
+
+  /** Applies [[MaxFieldLength]] through avro's own length checks, which
+    * then throw `SystemLimitException` (counted as
+    * `decode_error:SystemLimitException`). avro reads the limits once per
+    * JVM, when `SystemLimitException` initializes, so this runs before a
+    * partition builds its first reader — on executors and in sessions
+    * that never touch `GraftSession` alike — and makes avro re-read them
+    * if an earlier avro use in the JVM (an encoder's Utf8 checks its
+    * length too) initialized them first. */
+  private lazy val lengthLimits: Unit = {
+    Seq(SystemLimitException.MAX_STRING_LENGTH_PROPERTY,
+      SystemLimitException.MAX_BYTES_LENGTH_PROPERTY,
+      SystemLimitException.MAX_COLLECTION_LENGTH_PROPERTY)
+      .foreach(System.setProperty(_, MaxFieldLength.toString))
+    def limited = try { SystemLimitException.checkMaxStringLength(MaxFieldLength + 1L); false }
+      catch { case _: SystemLimitException => true }
+    if (!limited) {
+      val reset = classOf[SystemLimitException].getDeclaredMethod("resetLimits")
+      reset.setAccessible(true)
+      reset.invoke(null)
+    }
+    require(limited, s"avro did not apply the $MaxFieldLength-byte length limit")
+  }
 
   /** Avro record schema -> Spark StructType (types the reference's
     * `assemble_schema` emits + nullable unions + boolean/bytes). */
@@ -353,6 +388,7 @@ object AvroCodec {
         StructField("err", StringType, nullable = true))
     val nFields = structType.fields.length
     df.mapPartitions { iter =>
+      lengthLimits
       val readerSchema = new Schema.Parser().parse(readerSchemaJson)
       val convs = fromAvroConvs(readerSchema)
       // one resolving reader per distinct writer schema, built lazily
@@ -420,6 +456,7 @@ object AvroCodec {
         }
       }
     df.mapPartitions { iter =>
+      lengthLimits
       val schema = new Schema.Parser().parse(schemaJson)
       val reader = new GenericDatumReader[GenericRecord](schema)
       val writer = new GenericDatumWriter[GenericRecord](schema)

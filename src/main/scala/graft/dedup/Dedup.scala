@@ -488,13 +488,12 @@ object Dedup extends QueryModule {
     * on the driver when the pair summary fits (Components.autoLabel —
     * one collect instead of a loop of per-round jobs), distributed
     * min-label propagation + star-contraction fallback above the cap.
-    * Every node IS a pair endpoint, so the endpoint variant skips the
-    * membership/isolated anti-joins (which would re-run the pair
-    * generation plan). */
+    * Every node IS a pair endpoint, so no node frame is passed, which
+    * skips the membership/isolated anti-joins (they would re-run the
+    * pair generation plan). */
   private[dedup] def semanticClusterFrame(s: SparkSession, pairs: DataFrame): DataFrame = {
-    val undirected = pairs.select(col("vec_a").as("src"), col("vec_b").as("dst"))
-      .unionByName(pairs.select(col("vec_b").as("src"), col("vec_a").as("dst")))
-    val labels = graft.graph.Components.autoLabelEndpoints(s, undirected)
+    val labels = graft.graph.Components.autoLabel(s,
+      pairs.select(col("vec_a").as("src"), col("vec_b").as("dst")))
     labels
       .join(labels.groupBy(col("comp")).agg(count(lit(1)).as("cluster_size")), "comp")
       .select(col("id").as("vec_id"), col("comp").as("cluster_id"), col("cluster_size"))
@@ -1334,10 +1333,8 @@ object Dedup extends QueryModule {
     * labels over the representative edge graph, broadcast the label
     * back to members, attach cluster sizes. */
   private def assembleClusters(s: SparkSession, repEdges: DataFrame, memberReps: DataFrame): DataFrame = {
-    val undirected = repEdges
-      .unionByName(repEdges.select(col("dst").as("src"), col("src").as("dst")))
     val repNodes = memberReps.select(col("rep").as("id")).distinct()
-    val labels = graft.graph.Components.autoLabel(s, undirected, repNodes)
+    val labels = graft.graph.Components.autoLabel(s, repEdges, Some(repNodes))
     val members = memberReps.join(labels, memberReps("rep") === labels("id"))
       .select(col("doc_id"), col("comp"))
     members.join(

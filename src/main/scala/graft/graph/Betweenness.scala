@@ -82,48 +82,26 @@ object Betweenness {
       .underlying.movePointRight(6).longValueExact()
   }
 
-  /** Dense int indexing shared by BOTH driver kernels (node → index,
-    * adjacency as flat int arrays, loud symmetric-input contract):
-    * ~27M edge-visits per sf0.1 Brandes run through boxed
-    * HashMap[Long, _] lookups measured ~4.5 s of driver CPU; the same
-    * recurrences on flat arrays are tens of ms. */
-  private def indexedAdj(adj: Map[Long, Array[Long]], nodes: Seq[Long],
-                         kernel: String):
-      (scala.collection.mutable.HashMap[Long, Int], Array[Array[Int]]) = {
-    val idx = scala.collection.mutable.HashMap.empty[Long, Int]
-    nodes.foreach(v => idx.getOrElseUpdate(v, idx.size))
-    adj.keys.foreach(v => idx.getOrElseUpdate(v, idx.size))
-    val adjIdx = Array.fill(idx.size)(Array.empty[Int])
-    adj.foreach { case (v, ws) =>
-      adjIdx(idx(v)) = ws.map { w =>
-        require(idx.contains(w),
-          s"$kernel requires a SYMMETRIC adjacency: target $w of $v is not a key/node")
-        idx(w)
-      }
-    }
-    (idx, adjIdx)
-  }
-
   /** In-process exact Brandes with the 6dp-decimal accumulation —
     * the driver tier, and the reference the distributed tier is pinned
-    * to. `adj` must be symmetric; arithmetic is identical across the
-    * flat-array and frame tiers — exact long σ sums and micro-unit δ
-    * sums are order-independent. */
-  private[graft] def driverBrandes(adj: Map[Long, Array[Long]],
-                                   nodes: Seq[Long],
+    * to, over an undirected [[DriverGraph.Collected]] graph that holds
+    * every seed; arithmetic is identical across the flat-array and frame
+    * tiers — exact long σ sums and micro-unit δ sums are
+    * order-independent. */
+  private[graft] def driverBrandes(g: DriverGraph.Collected,
                                    seeds: Seq[Long]): Map[Long, BigDecimal] = {
     // δ accumulates in exact micro-units (each contribution has ≤ 6dp,
     // so the long sum IS the decimal sum): per-seed δ_s(v) ≤ n − 1 by
     // Brandes' target bound, so micros stay far below 2^63 even at the
     // 2M-edge driver cap — no overflow, no BigDecimal on the hot path.
-    val (idx, adjIdx) = indexedAdj(adj, nodes, "driverBrandes")
-    val n = adjIdx.length
+    val adjIdx = g.adj
+    val n = g.size
     val delta = new Array[Long](n) // micro-units
     val level = new Array[Int](n)
     val sigma = new Array[Long](n)
     val order = new Array[Int](n) // BFS visit order (level-contiguous)
     for (s0 <- seeds) {
-      val s0i = idx(s0)
+      val s0i = g.indexOf(s0)
       java.util.Arrays.fill(level, -1)
       level(s0i) = 0; sigma(s0i) = 1L; order(0) = s0i
       var lo = 0; var hi = 1; var hop = 0
@@ -182,8 +160,8 @@ object Betweenness {
         k -= 1
       }
     }
-    nodes.map { v =>
-      v -> BigDecimal(java.math.BigDecimal.valueOf(delta(idx(v)), 6))
+    g.ids.indices.map { i =>
+      g.ids(i) -> BigDecimal(java.math.BigDecimal.valueOf(delta(i), 6))
     }.toMap
   }
 
@@ -223,11 +201,10 @@ object Betweenness {
     * max level — computed INDEPENDENTLY of [[driverBrandes]]'s σ/δ
     * recurrences so the gate checks the backward pass against
     * recomputed distances, not against shared state. */
-  private[graft] def massReference(adj: Map[Long, Array[Long]],
-                                   nodes: Seq[Long],
+  private[graft] def massReference(g: DriverGraph.Collected,
                                    seeds: Seq[Long]): (Long, Long, Int) = {
-    val (idx, adjIdx) = indexedAdj(adj, nodes, "massReference")
-    val n = adjIdx.length
+    val adjIdx = g.adj
+    val n = g.size
     val level = new Array[Int](n)
     val order = new Array[Int](n)
     var distSum = 0L
@@ -235,7 +212,7 @@ object Betweenness {
     var maxLev = 0
     for (s0 <- seeds) {
       java.util.Arrays.fill(level, -1)
-      val s0i = idx(s0)
+      val s0i = g.indexOf(s0)
       level(s0i) = 0; order(0) = s0i
       var lo = 0; var hi = 1; var hop = 0
       while (lo < hi && hop < MaxRounds) {
@@ -264,13 +241,11 @@ object Betweenness {
     * machinery: per seed a flat-array level BFS, each reached node at
     * distance d accumulating round6(1/d) in exact micro-units (6dp
     * decimals, order-independent sums — the tier/oracle-equality
-    * contract). `adj` must be symmetric (loud contract as in
-    * [[driverBrandes]]). */
-  private[graft] def driverCloseness(adj: Map[Long, Array[Long]],
-                                     nodes: Seq[Long],
+    * contract), over the same graph form as [[driverBrandes]]. */
+  private[graft] def driverCloseness(g: DriverGraph.Collected,
                                      seeds: Seq[Long]): Map[Long, BigDecimal] = {
-    val (idx, adjIdx) = indexedAdj(adj, nodes, "driverCloseness")
-    val n = adjIdx.length
+    val adjIdx = g.adj
+    val n = g.size
     // only MaxRounds distinct contributions exist — precompute them
     val invMicros = Array.tabulate(MaxRounds + 1)(d =>
       if (d == 0) 0L else round6micros(1.0 / d))
@@ -278,7 +253,7 @@ object Betweenness {
     val level = new Array[Int](n)
     val order = new Array[Int](n)
     for (s0 <- seeds) {
-      val s0i = idx(s0)
+      val s0i = g.indexOf(s0)
       java.util.Arrays.fill(level, -1)
       level(s0i) = 0; order(0) = s0i
       var lo = 0; var hi = 1; var hop = 0
@@ -302,8 +277,8 @@ object Betweenness {
         !(lo until hi).exists(k => adjIdx(order(k)).exists(v => level(v) == -1))
       }, s"closeness BFS did not drain in $MaxRounds rounds")
     }
-    nodes.map { v =>
-      v -> BigDecimal(java.math.BigDecimal.valueOf(acc(idx(v)), 6))
+    g.ids.indices.map { i =>
+      g.ids(i) -> BigDecimal(java.math.BigDecimal.valueOf(acc(i), 6))
     }.toMap
   }
 

@@ -61,15 +61,10 @@ object Components {
     // blocks once, before the loop. (Executor-local, not fault-tolerant:
     // acceptable for an iterative scratch dataset — a lost executor
     // restarts the query, not silent corruption.)
-    val t0 = System.nanoTime()
     val edges = undirected.localCheckpoint()
-    val t1 = System.nanoTime()
     var labels = nodes.select(col("id"), col("id").as("comp")).localCheckpoint()
-    val t2 = System.nanoTime()
     val labelCount = labels.count()
     val edgeCount = edges.count()
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(s"[cc] setup labels=$labelCount edges=$edgeCount edge_ckpt_sec=${(t1 - t0) / 1e9} label_ckpt_sec=${(t2 - t1) / 1e9}")
     // the loop regime is sized by the LARGER side: a dense pair graph
     // (dedup_clusters: ~100x more edges than nodes) is edge-bound even
     // when the label set is tiny
@@ -92,7 +87,6 @@ object Components {
         s.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
       }
       while (changed > 0 && rounds < maxRounds) {
-        val tR0 = System.nanoTime()
         val neighborMin = edges
           .join(labels, col("src") === col("id"))
           .select(col("dst").as("id"), col("comp"))
@@ -104,10 +98,7 @@ object Components {
         merged =
           if (rounds % 6 == 5) merged.localCheckpoint()
           else merged.persist(lvl)
-        val tR = System.nanoTime()
         changed = merged.filter(col("comp") =!= col("oldc")).count()
-        if (sys.env.contains("GRAFT_CC_DEBUG"))
-          System.err.println(s"[cc] round=$rounds changed=$changed count_sec=${(System.nanoTime() - tR) / 1e9} round_sec=${(System.nanoTime() - tR0) / 1e9}")
         if (prev != null) prev.unpersist()
         prev = merged
         labels = merged.select(col("id"), col("comp"))
@@ -131,89 +122,63 @@ object Components {
     labels
   }
 
-  /** Connected components with an automatic driver tier: when the edge
-    * list fits comfortably on the driver (`driverCap` rows — the same
-    * already-broadcast-sized argument as the dedup mask tier), solve
-    * with a local union-find in one collect + one createDataFrame
+  /** Connected components with the [[DriverGraph]] tier choice: when the
+    * edge list fits the driver, one collect and a local union-find
     * instead of an iterative loop of Spark jobs. The dedup_clusters
     * postmortem is the rationale: on small-to-medium summaries the
     * propagation loop's fixed per-round job overhead dominates actual
-    * work by 10x. Larger graphs fall through to [[labelPropagation]]
-    * (which itself falls back to star contraction on high diameter).
+    * work by 10x. Larger graphs run [[labelPropagation]] (which itself
+    * falls back to star contraction on high diameter).
     *
-    * @param undirected symmetric (src, dst) long-id edge list
-    * @param nodes      (id) node dictionary
-    * @return           (id, comp), comp = min reachable node id
+    * @param edges (src, dst) long-id edge list in either orientation —
+    *              mirrored here for the distributed tier only
+    * @param nodes (id) node dictionary; None when the node set IS the
+    *              edge endpoint set (a pair graph), which skips the
+    *              membership check and the isolated-node union whose
+    *              anti-joins would re-run an unpersisted caller's whole
+    *              edge-generation plan
+    * @return      (id, comp), comp = min reachable node id
     */
-  def autoLabel(s: SparkSession, undirected: DataFrame, nodes: DataFrame,
-                driverCap: Long = 2000000L): DataFrame = {
+  def autoLabel(s: SparkSession, edges: DataFrame, nodes: Option[DataFrame] = None,
+                driverCap: Long = DriverGraph.Cap): DataFrame = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val edges = undirected.select(col("src").cast("long"), col("dst").cast("long"))
+    val pairs = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .persist(lvl)
-    if (edges.count() > driverCap) {
-      val out = labelPropagation(s, edges, nodes)
-      edges.unpersist()
-      return out
+    val out = DriverGraph.tiered(pairs, driverCap) { g =>
+      val endpointLabels = driverSolve(s, g)
+      nodes.fold(endpointLabels) { ns =>
+        val ids = ns.select(col("id").cast("long").as("id"))
+        // contract check without collecting nodes: an edge endpoint
+        // absent from `nodes` is malformed input — the propagation loop
+        // would half-bridge through it (it relays but its gain never
+        // counts as `changed`, so closure silently stops early); fail
+        // loudly instead of picking either wrong answer
+        val unknown = endpointLabels.select(col("id"))
+          .join(ids, Seq("id"), "left_anti").limit(1).collect()
+        if (unknown.nonEmpty)
+          throw new IllegalArgumentException(
+            s"edge endpoint not in nodes: ${unknown.head.getLong(0)}")
+        // isolated nodes (no incident edge) label themselves
+        DriverGraph.withUncollected(endpointLabels, ids, col("id"))
+      }
+    } { _ =>
+      val sym = pairs.unionByName(pairs.select(col("dst").as("src"), col("src").as("dst")))
+      labelPropagation(s, sym, nodes.getOrElse(
+        sym.select(col("src").as("id")).distinct()))
     }
-    val endpointLabels = driverSolve(s, edges)
-    edges.unpersist()
-    // contract check without collecting nodes: an edge endpoint absent
-    // from `nodes` is malformed input — the propagation loop would
-    // half-bridge through it (it relays but its gain never counts as
-    // `changed`, so closure silently stops early); fail loudly instead
-    // of picking either wrong answer. Anti-join is endpoint-sized.
-    val unknown = endpointLabels.select(col("id"))
-      .join(nodes.select(col("id").cast("long").as("id")), Seq("id"), "left_anti")
-      .limit(1).collect()
-    if (unknown.nonEmpty)
-      throw new IllegalArgumentException(
-        s"edge endpoint not in nodes: ${unknown.head.getLong(0)}")
-    // isolated nodes (no incident edge) label themselves distributively —
-    // the nodes frame is never collected
-    val isolated = nodes.select(col("id").cast("long").as("id"))
-      .join(broadcast(endpointLabels.select(col("id"))), Seq("id"), "left_anti")
-      .select(col("id"), col("id").as("comp"))
-    endpointLabels.unionByName(isolated)
-  }
-
-  /** [[autoLabel]] for the common case where the node set IS the edge
-    * endpoint set (e.g. a pair graph where every node comes from a
-    * pair): skips the membership check and the isolated-node union,
-    * whose anti-joins would re-run the caller's whole edge-generation
-    * plan when it isn't persisted. */
-  def autoLabelEndpoints(s: SparkSession, undirected: DataFrame,
-                         driverCap: Long = 2000000L): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val edges = undirected.select(col("src").cast("long"), col("dst").cast("long"))
-      .persist(lvl)
-    if (edges.count() > driverCap) {
-      val out = labelPropagation(s, edges, edges.select(col("src").as("id")).distinct())
-      edges.unpersist()
-      return out
-    }
-    val out = driverSolve(s, edges)
-    edges.unpersist()
+    pairs.unpersist()
     out
   }
 
-  /** Driver union-find over a collected (already cap-checked) edge
-    * list: labels for every EDGE ENDPOINT (<= 2x the cap by
-    * construction) — the node dictionary is never collected. */
-  private def driverSolve(s: SparkSession, edges: DataFrame): DataFrame = {
-    val pairs = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
-    val ids = pairs.iterator.flatMap(p => Iterator(p._1, p._2)).toArray.distinct
-    val idx = ids.zipWithIndex.toMap
-    val uf = new UnionFind(ids.length)
-    pairs.foreach { case (a, b) => uf.union(idx(a), idx(b)) }
-    // component label = min node ID (not min index): index order is
-    // collect order, which need not be id order
-    val minId = Array.fill(ids.length)(Long.MaxValue)
-    for (i <- ids.indices) {
-      val r = uf.find(i)
-      if (ids(i) < minId(r)) minId(r) = ids(i)
-    }
+  /** Driver union-find over a collected edge list: labels for every
+    * EDGE ENDPOINT. [[UnionFind]] roots each component at its minimum
+    * index, and the ids are sorted, so the root's id is the component's
+    * min node id. */
+  private def driverSolve(s: SparkSession, g: DriverGraph.Collected): DataFrame = {
+    val uf = new UnionFind(g.size)
+    for (i <- g.adj.indices; j <- g.adj(i)) uf.union(i, j)
     import s.implicits._
-    ids.indices.map(i => (ids(i), minId(uf.find(i)))).toDF("id", "comp")
+    g.ids.indices.map(i => (g.ids(i), g.ids(uf.find(i)))).toDF("id", "comp")
   }
 
   /** Connected components by alternating large-star/small-star

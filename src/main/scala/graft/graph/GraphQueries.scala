@@ -38,14 +38,45 @@ object GraphQueries extends QueryModule {
         JOIN objs d ON t.object = d.name
         GROUP BY s.object_id, d.object_id, predicate)"""
 
-  /** spo_pagerank body — fixed-point integer power iteration with the
-    * autoLabel-style driver tier (see the QueryDef note). `driverCap`
-    * parameterized so specs can force either tier and assert equality.
+  /** Initial and teleport mass of the scaled-integer rank recurrence. */
+  private val RankInit = 1000000000000L
+  private val RankTeleport = 150000000000L
+
+  /** spo_pagerank / spo_ppr body — ten iterations of ONE scaled-BIGINT
+    * recurrence over the distinct DIRECTED edge set, parameterised by
+    * its teleport set S:
+    * r₀(v) = 1e12·[v∈S];
+    * r_k(v) = 1.5e11·[v∈S] + (85·Σ_{u→v} r_{k−1}(u) div od(u)) div 100.
+    * Global pagerank teleports to every node ("important anywhere");
+    * personalized pagerank (VERDICT r12 item 6) only to the fixed
+    * centrality seed set [[seedFrameOf]] ("important NEAR these
+    * entities", the entity-resolution relevance primitive). Exact
+    * integer arithmetic: no float drift, oracle-unrollable, and the two
+    * tiers agree bit-for-bit.
+    *
+    * Tiers ([[DriverGraph.tiered]]): ten distributed iterations cost ~68
+    * sub-second jobs of tiny-data joins (measured 4.7 s at sf0.1), so a
+    * driver-sized edge set runs the recurrence in one collect. The
+    * driver tier collects only the edges and the ≤128-row seed frame,
+    * never the node dictionary (r13: a first ppr draft
+    * collected the full dict, whose size the edge cap does not bound —
+    * an isolated-heavy graph would have OOMed the driver while the
+    * distributed tier survived). Seeds ride into the collected id set
+    * and hold the teleport-only fixpoint when isolated; every other
+    * uncollected node holds 1.5e11·[v∈S] and joins back distributively.
+    * Above the cap: ten (edge ⋈ rank) shuffles, the seed frame
+    * BROADCAST into the node frame once, linear in |E| at any scale.
+    * Mass never exceeds |S|·1e12, so 85·Σ overflows only past ~1e5
+    * nodes ALL funneling into one target (ppr's fixed |S| = 128 is far
+    * from it at any graph size).
+    *
+    * @param teleport (seed) frame of S; None = every node
+    * @return top-20 (object_id, `outCol`) by (`outCol` DESC, object_id)
     */
-  private[graft] def pagerank(s: org.apache.spark.sql.SparkSession, dir: String,
-                              driverCap: Long = 2000000L): org.apache.spark.sql.DataFrame = {
+  private def rank(g: TripleStore.StagedGraph, teleport: Option[DataFrame],
+                   outCol: String, driverCap: Long): DataFrame = {
+    val s = g.half.sparkSession
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val g = T.staged(s, dir)
     // distinct directed edges from the staged weighted edge list — the
     // id resolution joins ran once at staging, not once per query
     val edges = g.relationships
@@ -53,216 +84,106 @@ object GraphQueries extends QueryModule {
       .distinct()
       .localCheckpoint()
     val nodes = g.dict.select(col("object_id").as("id"))
-    // driver tier (the autoLabel discipline): ten distributed iterations
-    // cost ~68 sub-second jobs of tiny-data joins (measured 4.7 s at
-    // sf0.1); when the edge summary fits the driver, the identical
-    // integer arithmetic runs in-memory in one collect — same bits,
-    // since exact integer ops have no summation-order sensitivity.
-    // Distributed power iteration remains the >cap path with no
-    // driver-memory assumption (measured 1.3 s after this tiering).
-    val rank: org.apache.spark.sql.DataFrame =
-      if (edges.count() <= driverCap) {
-        val edgeArr = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
-        val ids = edgeArr.iterator.flatMap(p => Iterator(p._1, p._2)).toArray.distinct
-        val idx = ids.zipWithIndex.toMap
-        val od = new Array[Long](ids.length)
-        edgeArr.foreach { case (s0, _) => od(idx(s0)) += 1L }
-        var r = Array.fill(ids.length)(1000000000000L)
-        for (_ <- 1 to 10) {
-          val sums = new Array[Long](ids.length)
-          edgeArr.foreach { case (s0, d0) =>
-            val si = idx(s0)
-            sums(idx(d0)) += r(si) / od(si)
-          }
-          r = sums.map(cs => 150000000000L + (85L * cs) / 100L)
-        }
-        import s.implicits._
-        val endpointRanks = ids.indices.map(i => (ids(i), r(i))).toDF("id", "r")
-        // nodes with no incident edge hold the no-inflow fixpoint
-        nodes
-          .join(broadcast(endpointRanks.select(col("id"))), Seq("id"), "left_anti")
-          .select(col("id"), lit(150000000000L).as("r"))
-          .unionByName(endpointRanks)
-      } else {
-        val outDeg = edges.groupBy(col("src")).agg(count(lit(1)).as("od")).persist(lvl)
-        val nodesCk = nodes.localCheckpoint()
-        var rk = nodesCk.select(col("id"), lit(1000000000000L).as("r"))
-        for (it <- 1 to 10) {
-          val contrib = edges
-            .join(outDeg, "src")
-            .join(rk.select(col("id").as("src"), col("r")), "src")
-            .select(col("dst").as("id"), expr("r div od").as("c"))
-          val sums = contrib.groupBy(col("id")).agg(sum(col("c")).as("cs"))
-          rk = nodesCk
-            .join(sums, Seq("id"), "left")
-            .select(col("id"),
-              (lit(150000000000L) + expr("(85 * coalesce(cs, 0L)) div 100")).as("r"))
-          if (it % 3 == 0) rk = rk.localCheckpoint()
-        }
-        rk
+    lazy val seedIds = teleport.fold(Array.emptyLongArray)(_.collect().map(_.getLong(0)))
+    val ranks = DriverGraph.tiered(edges, driverCap, directed = true, seedIds) { cg =>
+      val n = cg.size
+      val inS = Array.fill(n)(teleport.isEmpty)
+      seedIds.foreach(v => inS(cg.indexOf(v)) = true)
+      var r = Array.tabulate(n)(i => if (inS(i)) RankInit else 0L)
+      for (_ <- 1 to 10) {
+        val sums = new Array[Long](n)
+        for (u <- 0 until n; v <- cg.adj(u)) sums(v) += r(u) / cg.adj(u).length
+        r = Array.tabulate(n)(i => (if (inS(i)) RankTeleport else 0L) + (85L * sums(i)) / 100L)
       }
-    rank
-      .select(col("id").as("object_id"), col("r").as("rank_scaled"))
-      .orderBy(col("rank_scaled").desc, col("object_id"))
+      import s.implicits._
+      DriverGraph.withUncollected(cg.ids.indices.map(i => (cg.ids(i), r(i))).toDF("id", "r"),
+        nodes, lit(if (teleport.isEmpty) RankTeleport else 0L))
+    } { _ =>
+      val outDeg = edges.groupBy(col("src")).agg(count(lit(1)).as("od")).persist(lvl)
+      // in_s rides the node frame for the whole loop: one broadcast join
+      // against the ≤128-row seed frame, reused by every iteration
+      val nodesCk = teleport.fold(nodes.select(col("id"), lit(1L).as("in_s"))) { t =>
+        nodes.join(broadcast(t.select(col("seed").as("id"), lit(1L).as("in_s"))),
+            Seq("id"), "left")
+          .select(col("id"), coalesce(col("in_s"), lit(0L)).as("in_s"))
+      }.localCheckpoint()
+      var rk = nodesCk.select(col("id"), (col("in_s") * lit(RankInit)).as("r"))
+      for (it <- 1 to 10) {
+        val contrib = edges
+          .join(outDeg, "src")
+          .join(rk.filter(col("r") > 0L).select(col("id").as("src"), col("r")), "src")
+          .select(col("dst").as("id"), expr("r div od").as("c"))
+        val sums = contrib.groupBy(col("id")).agg(sum(col("c")).as("cs"))
+        rk = nodesCk
+          .join(sums, Seq("id"), "left")
+          .select(col("id"), (col("in_s") * lit(RankTeleport) +
+            expr("(85 * coalesce(cs, 0L)) div 100")).as("r"))
+        if (it % 3 == 0) rk = rk.localCheckpoint()
+      }
+      rk
+    }
+    ranks
+      .select(col("id").as("object_id"), col("r").as(outCol))
+      .orderBy(col(outCol).desc, col("object_id"))
       .limit(20)
   }
 
-  /** spo_ppr body — PERSONALIZED PageRank from the fixed centrality
-    * seed set (VERDICT r12 item 6): global pagerank answers "important
-    * anywhere"; PPR answers "important NEAR these entities" — the
-    * entity-resolution / related-entity relevance primitive. Identical
-    * scaled-BIGINT recurrence to [[pagerank]] (exact integer
-    * arithmetic, no float drift, oracle-unrollable) with ONE change:
-    * the teleport term lands only on the seed set S =
-    * [[seedIdsOf]]/[[seedFrameOf]] (the one centrality seed rule —
-    * id % SeedMod == 0, smallest SeedCount). r₀(v) = 1e12·[v∈S];
-    * r_k(v) = 1.5e11·[v∈S] + (85·Σ_{u→v} r_{k−1}(u) div od(u)) div 100,
-    * ten iterations over the distinct DIRECTED edge set. Mass never
-    * exceeds |S|·1e12 ≈ 1.3e14, so 85·Σ stays far under Long.Max at
-    * any graph size — tighter than global pagerank's bound because the
-    * injected mass is fixed at |S| nodes, not |V|.
-    *
-    * Tiers mirror [[pagerank]] (spec-pinned equal): under `driverCap`
-    * directed edges the identical integer recurrence runs in one
-    * collect; above it, ten (edge ⋈ rank) shuffles with the 128-row
-    * seed frame BROADCAST into the node frame once — per-iteration
-    * cost identical to global pagerank, linear in |E| at any scale.
-    * Output: top-20 by (ppr_scaled DESC, object_id). */
-  private[graft] def ppr(s: org.apache.spark.sql.SparkSession, dir: String,
-                         driverCap: Long = 2000000L): org.apache.spark.sql.DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val g = T.staged(s, dir)
-    val edges = g.relationships
-      .select(col("source_id").as("src"), col("target_id").as("dst"))
-      .distinct()
-      .localCheckpoint()
-    val nodes = g.dict.select(col("object_id").as("id"))
-    val rank: org.apache.spark.sql.DataFrame =
-      if (edges.count() <= driverCap) {
-        // the driver tier collects ONLY edge endpoints and the ≤128-row
-        // seed frame, never the node dictionary — pagerank's
-        // edge-bounded discipline (review finding r13: a first draft
-        // collected the full dict, whose size the edge cap does not
-        // bound; an isolated-heavy graph would have OOMed the driver
-        // while the distributed tier survived). Isolated seeds ride in
-        // via the seed frame and hold the teleport-only fixpoint;
-        // every other non-endpoint node is exactly 0 and joins back
-        // distributively below.
-        val seedIds = seedFrameOf(nodes).collect().map(_.getLong(0))
-        val seedSet = seedIds.toSet
-        val edgeArr = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
-        val ids = (edgeArr.iterator.flatMap(p => Iterator(p._1, p._2)) ++
-          seedIds.iterator).toArray.distinct
-        val idx = ids.zipWithIndex.toMap
-        val od = new Array[Long](ids.length)
-        edgeArr.foreach { case (s0, _) => od(idx(s0)) += 1L }
-        var r = ids.map(v => if (seedSet(v)) 1000000000000L else 0L)
-        for (_ <- 1 to 10) {
-          val sums = new Array[Long](ids.length)
-          edgeArr.foreach { case (s0, d0) =>
-            val si = idx(s0)
-            if (r(si) > 0L) sums(idx(d0)) += r(si) / od(si)
-          }
-          r = ids.indices.toArray.map(i =>
-            (if (seedSet(ids(i))) 150000000000L else 0L) + (85L * sums(i)) / 100L)
-        }
-        import s.implicits._
-        val touched = ids.indices.map(i => (ids(i), r(i))).toDF("id", "r")
-        nodes
-          .join(broadcast(touched.select(col("id"))), Seq("id"), "left_anti")
-          .select(col("id"), lit(0L).as("r"))
-          .unionByName(touched)
-      } else {
-        val outDeg = edges.groupBy(col("src")).agg(count(lit(1)).as("od")).persist(lvl)
-        val seeds = seedFrameOf(nodes)
-        // is_seed rides the node frame for the whole loop: one
-        // broadcast join against the ≤128-row seed frame, reused by
-        // every iteration's teleport term
-        val nodesCk = nodes
-          .join(broadcast(seeds.select(col("seed").as("id"), lit(1L).as("is_seed"))),
-            Seq("id"), "left")
-          .select(col("id"), coalesce(col("is_seed"), lit(0L)).as("is_seed"))
-          .localCheckpoint()
-        var rk = nodesCk.select(col("id"), (col("is_seed") * lit(1000000000000L)).as("r"))
-        for (it <- 1 to 10) {
-          val contrib = edges
-            .join(outDeg, "src")
-            .join(rk.filter(col("r") > 0L).select(col("id").as("src"), col("r")), "src")
-            .select(col("dst").as("id"), expr("r div od").as("c"))
-          val sums = contrib.groupBy(col("id")).agg(sum(col("c")).as("cs"))
-          rk = nodesCk
-            .join(sums, Seq("id"), "left")
-            .select(col("id"),
-              (col("is_seed") * lit(150000000000L) +
-                expr("(85 * coalesce(cs, 0L)) div 100")).as("r"))
-          if (it % 3 == 0) rk = rk.localCheckpoint()
-        }
-        rk
-      }
-    rank
-      .select(col("id").as("object_id"), col("r").as("ppr_scaled"))
-      .orderBy(col("ppr_scaled").desc, col("object_id"))
-      .limit(20)
-  }
+  private[graft] def pagerank(g: TripleStore.StagedGraph,
+                              driverCap: Long = DriverGraph.Cap): DataFrame =
+    rank(g, None, "rank_scaled", driverCap)
+
+  private[graft] def ppr(g: TripleStore.StagedGraph,
+                         driverCap: Long = DriverGraph.Cap): DataFrame =
+    rank(g, Some(seedFrameOf(g.dict.select(col("object_id").as("id")))), "ppr_scaled",
+      driverCap)
 
   /** spo_bfs body — single-source shortest hop distances over the
     * undirected entity graph, from the entity with object_id 1.
     * Frontier expansion: each round joins the current frontier to the
     * edge list and keeps previously-unseen nodes — O(diameter) rounds,
-    * each one join + one anti-join, lineage checkpointed. Same driver
-    * tier as pagerank/autoLabel: under `driverCap` edges the identical
-    * BFS runs in one collect (hop counts are exact integers — no
-    * summation-order sensitivity), spec-pinned equal to the distributed
-    * loop. Unreachable nodes are excluded (mirrored by the oracle's
-    * recursive reach set).
+    * each one join + one anti-join, lineage checkpointed. The
+    * [[DriverGraph]] tier runs the identical level-synchronous BFS in
+    * one collect (hop counts are exact integers — no summation-order
+    * sensitivity). Unreachable nodes are excluded (mirrored by the
+    * oracle's recursive reach set).
     */
-  private[graft] def bfs(s: org.apache.spark.sql.SparkSession, dir: String,
-                         driverCap: Long = 2000000L): org.apache.spark.sql.DataFrame = {
-    val g = T.staged(s, dir)
-    val objs = g.dict
-    val half = g.half
-    val edges = half
-      .select(col("a").as("src"), col("b").as("dst"))
-      .unionByName(half.select(col("b").as("src"), col("a").as("dst")))
-      .localCheckpoint()
+  private[graft] def bfs(g: TripleStore.StagedGraph,
+                         driverCap: Long = DriverGraph.Cap): DataFrame = {
+    val s = g.half.sparkSession
     val seed = 1L
     val maxRounds = 50
     // the seed row exists only if entity 1 exists (empty input → empty
     // output in BOTH tiers and the oracle)
-    val seedRows = objs.filter(col("object_id") === seed)
+    val seedRows = g.dict.filter(col("object_id") === seed)
       .select(col("object_id").as("id"), lit(0L).as("dist"))
       .localCheckpoint()
-    if (seedRows.count() == 0) {
-      seedRows
-        .select(col("id").as("object_id"), col("dist"))
-    } else if (edges.count() <= driverCap) {
-      val adj = scala.collection.mutable.HashMap.empty[Long, scala.collection.mutable.ArrayBuffer[Long]]
-      edges.collect().foreach { r =>
-        adj.getOrElseUpdate(r.getLong(0), scala.collection.mutable.ArrayBuffer.empty) += r.getLong(1)
-      }
+    if (seedRows.count() == 0) seedRows.select(col("id").as("object_id"), col("dist"))
+    else DriverGraph.tiered(g.half, driverCap, extraIds = Array(seed)) { cg =>
       // level-synchronous BFS — same maxRounds bound as the distributed
-      // tier and the oracle's dist cap, loud on overflow
-      val dist = scala.collection.mutable.HashMap(seed -> 0L)
-      var level = List(seed); var hop = 0L
-      while (level.nonEmpty && hop < maxRounds) {
+      // tier and the oracle's dist cap
+      val dist = Array.fill(cg.size)(-1L)
+      val order = new Array[Int](cg.size)
+      order(0) = cg.indexOf(seed); dist(order(0)) = 0L
+      var lo = 0; var hi = 1; var hop = 0
+      while (lo < hi && hop < maxRounds) {
         hop += 1
-        level = level.flatMap(u => adj.getOrElse(u, Nil))
-          .distinct.filter(v => !dist.contains(v))
-        level.foreach(v => dist(v) = hop)
+        val end = hi
+        while (lo < end) {
+          for (v <- cg.adj(order(lo)) if dist(v) < 0L) { dist(v) = hop; order(hi) = v; hi += 1 }
+          lo += 1
+        }
       }
       // cap boundary aligned with the oracle's dist cap: a graph that
       // fully drains AT maxRounds is a valid answer (the oracle returns
       // those dist-50 nodes); crash only if an unexplored hop-51
       // frontier exists — where the oracle would silently truncate
-      if (level.nonEmpty) {
-        val beyond = level.flatMap(u => adj.getOrElse(u, Nil))
-          .distinct.filter(v => !dist.contains(v))
-        require(beyond.isEmpty, s"BFS did not drain in $maxRounds rounds")
-      }
+      require((lo until hi).forall(k => cg.adj(order(k)).forall(dist(_) >= 0L)),
+        s"BFS did not drain in $maxRounds rounds")
       import s.implicits._
-      dist.toSeq.toDF("object_id", "dist")
-        .orderBy(col("object_id"))
-    } else {
+      (0 until hi).map(k => (cg.ids(order(k)), dist(order(k))))
+        .toDF("object_id", "dist").orderBy(col("object_id"))
+    } { _ =>
+      val edges = DriverGraph.mirrored(g.half).localCheckpoint()
       var dist = seedRows
       var frontier = dist
       var hop = 0L
@@ -277,11 +198,7 @@ object GraphQueries extends QueryModule {
         dist = dist.unionByName(next).localCheckpoint()
         frontier = next
       }
-      // loud bound aligned with the oracle's dist cap: a frontier that
-      // is non-empty at exactly maxRounds is still a valid full answer
-      // if it has no unexplored neighbors (the oracle returns dist-50
-      // nodes); crash only if a genuine hop-51 frontier exists — where
-      // the oracle would silently truncate
+      // the same loud bound as the driver tier
       if (frontier.limit(1).count() > 0) {
         val beyond = frontier.select(col("id").as("src"))
           .join(edges, "src")
@@ -320,55 +237,45 @@ object GraphQueries extends QueryModule {
 
   /** Shared tier dispatch for the sampled-seed centrality queries
     * (betweenness / closeness — one scaffold, two kernels, the
-    * Funnel.step discipline): under `driverCap` edges, collect the
-    * (already-persisted) HALF edge set once and symmetrize in-process
-    * (half the transfer, no wasted checkpoint/count jobs on a frame
-    * we'd collect anyway) and run `driverKernel`; above it, build the
-    * symmetric edge + seed frames and run `distBuilder`. */
+    * Funnel.step discipline): the [[DriverGraph]] tier runs
+    * `driverKernel` on the collected half-edge set plus the ≤128 seeds
+    * (the node dictionary stays distributed; uncollected nodes score 0);
+    * above the cap, the symmetric edge + seed frames feed `distBuilder`.
+    * Returns (id, `outCol`) for every node. */
   private def sampledSeedCentrality(
-      s: org.apache.spark.sql.SparkSession, dir: String, driverCap: Long,
-      outCol: String)(
-      driverKernel: (Map[Long, Array[Long]], Seq[Long], Seq[Long]) => Map[Long, BigDecimal])(
+      g: TripleStore.StagedGraph, driverCap: Long, outCol: String)(
+      driverKernel: (DriverGraph.Collected, Seq[Long]) => Map[Long, BigDecimal])(
       distBuilder: (DataFrame, DataFrame, DataFrame, Long, Long) => DataFrame): DataFrame = {
-    val g = T.staged(s, dir)
-    val half = g.half
+    val s = g.half.sparkSession
     val ids = g.dict.select(col("object_id").as("id"))
-    val halfCount = half.count()
-    if (2 * halfCount <= driverCap) {
-      val hs = half.select(col("a"), col("b")).collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-      val adj = (hs ++ hs.map(e => (e._2, e._1)))
-        .groupBy(_._1).map { case (k, rs) => k -> rs.map(_._2) }
-      val nodeIds = ids.collect().map(_.getLong(0)).toSeq
-      val d = driverKernel(adj, nodeIds, seedIdsOf(nodeIds))
+    val zero = lit(0).cast("decimal(38,6)")
+    lazy val seedIds = seedFrameOf(ids).collect().map(_.getLong(0))
+    DriverGraph.tiered(g.half, driverCap, extraIds = seedIds) { cg =>
       import s.implicits._
-      d.toSeq.toDF("id", outCol)
+      val d = driverKernel(cg, seedIds.toSeq).toSeq.toDF("id", outCol)
         .select(col("id"), col(outCol).cast("decimal(38,6)"))
-    } else {
-      val edges = half
-        .select(col("a").as("src"), col("b").as("dst"))
-        .unionByName(half.select(col("b").as("src"), col("a").as("dst")))
-        .localCheckpoint()
+      DriverGraph.withUncollected(d, ids, zero)
+    } { halfRows =>
+      val edges = DriverGraph.mirrored(g.half).localCheckpoint()
       val seeds = seedFrameOf(ids).localCheckpoint()
       val seedRows = seeds.count()
-      if (seedRows == 0)
-        ids.select(col("id"), lit(0).cast("decimal(38,6)").as(outCol))
-      else distBuilder(edges, ids, seeds, seedRows, 2 * halfCount)
+      if (seedRows == 0) ids.select(col("id"), zero.as(outCol))
+      else distBuilder(edges, ids, seeds, seedRows, 2 * halfRows)
     }
   }
 
   /** spo_betweenness body — sampled-source Brandes over the undirected
     * entity graph (see [[Betweenness]] for the algorithm and the
-    * cross-tier 6dp-decimal exactness contract). The bfs/kcore two-tier
-    * dispatch via [[sampledSeedCentrality]]: under `driverCap` edges the
-    * identical decimal recurrence runs in one collect; above it, the
+    * cross-tier 6dp-decimal exactness contract). Two tiers via
+    * [[sampledSeedCentrality]]: the [[DriverGraph]] tier runs the
+    * identical decimal recurrence in one collect; above the cap, the
     * joint-seed frame loops. Output carries the distinct-neighbor
     * `degree` as the driver-visible gate column: degree ≤ 1 nodes must
     * score exactly 0 (a leaf is never interior to a shortest path) —
     * checkable from the output alone. */
-  private[graft] def betweenness(s: org.apache.spark.sql.SparkSession, dir: String,
-                                 driverCap: Long = 2000000L): DataFrame = {
-    val g = T.staged(s, dir)
+  private[graft] def betweenness(g: TripleStore.StagedGraph,
+                                 driverCap: Long = DriverGraph.Cap): DataFrame = {
+    val s = g.half.sparkSession
     val half = g.half
     val deg = half.select(col("a").as("id"))
       .unionByName(half.select(col("b").as("id")))
@@ -379,10 +286,10 @@ object GraphQueries extends QueryModule {
     // ([[Betweenness.massReference]]), the distributed tier against its
     // own forward-pass level counts
     val gate = new Betweenness.MassGate
-    val cent = sampledSeedCentrality(s, dir, driverCap, "betweenness")(
-      (adj, nodes, seeds) => {
-        val d = Betweenness.driverBrandes(adj, nodes, seeds)
-        val (distSum, dagEdges, maxLev) = Betweenness.massReference(adj, nodes, seeds)
+    val cent = sampledSeedCentrality(g, driverCap, "betweenness")(
+      (cg, seeds) => {
+        val d = Betweenness.driverBrandes(cg, seeds)
+        val (distSum, dagEdges, maxLev) = Betweenness.massReference(cg, seeds)
         val deltaMicros = d.valuesIterator.foldLeft(0L)((acc, v) =>
           Math.addExact(acc, v.underlying.movePointRight(6).longValueExact()))
         gate.errMicros = Math.abs(
@@ -419,12 +326,11 @@ object GraphQueries extends QueryModule {
     * recurrence — distances unroll in one recursive CTE and every
     * 1/d rounds identically in both engines: a double's decimal
     * expansion can never sit exactly on a 6dp tie). */
-  private[graft] def closeness(s: org.apache.spark.sql.SparkSession, dir: String,
-                               driverCap: Long = 2000000L): DataFrame = {
-    val g = T.staged(s, dir)
+  private[graft] def closeness(g: TripleStore.StagedGraph,
+                               driverCap: Long = DriverGraph.Cap): DataFrame = {
     val ids = g.dict.select(col("object_id").as("id"))
     val dec = "decimal(28,6)"
-    val cent = sampledSeedCentrality(s, dir, driverCap, "closeness")(
+    val cent = sampledSeedCentrality(g, driverCap, "closeness")(
       Betweenness.driverCloseness) { (edges, distIds, seeds, seedRows, edgeRows) =>
       val (levels, _, _) = Betweenness.forwardLevels(edges, seeds,
         recordDag = false, seedRows, edgeRows)
@@ -458,51 +364,49 @@ object GraphQueries extends QueryModule {
     * w = 1 + (a + b) mod 7: the shipped triples carry no cost column,
     * so weights derive deterministically from the endpoint ids —
     * INTEGER weights, so both engines' relaxation arithmetic is exact
-    * (no float adds to drift). The bfs/kcore two-tier discipline:
-    * under `driverCap` the SAME bounded Jacobi relaxation runs
-    * in-process (identical integer comparisons, so the tiers agree
-    * bit-for-bit); above it each round is one relax-join + one
+    * (no float adds to drift). Two tiers ([[DriverGraph]]): the driver
+    * tier runs the SAME bounded Jacobi relaxation in-process (identical
+    * integer comparisons, so the tiers agree bit-for-bit); the
+    * distributed tier makes each round one relax-join + one
     * min-aggregate, lineage-checkpointed. Both tiers require the
     * (round <= bound)-th round to confirm the fixpoint, mirroring the
     * oracle's [[SsspMaxRounds]] unrolled MATERIALIZED rounds. */
-  private[graft] def sssp(s: org.apache.spark.sql.SparkSession, dir: String,
-                          driverCap: Long = 2000000L,
-                          maxRounds: Int = SsspMaxRounds): org.apache.spark.sql.DataFrame = {
+  private[graft] def sssp(g: TripleStore.StagedGraph,
+                          driverCap: Long = DriverGraph.Cap,
+                          maxRounds: Int = SsspMaxRounds): DataFrame = {
+    val s = g.half.sparkSession
     import s.implicits._
-    val g = T.staged(s, dir)
-    val half = g.half
-    val wCol = lit(1L) + pmod(col("a") + col("b"), lit(7L))
-    val edges = half.select(col("a").as("src"), col("b").as("dst"), wCol.as("w"))
-      .unionByName(half.select(col("b").as("src"), col("a").as("dst"), wCol.as("w")))
-      .localCheckpoint()
     val seed = 1L
     val seedRows = g.dict.filter(col("object_id") === seed)
       .select(col("object_id").as("id"), lit(0L).as("dist"))
       .localCheckpoint()
-    if (seedRows.count() == 0) {
-      seedRows.select(col("id").as("object_id"), col("dist"))
-    } else if (edges.count() / 2 <= driverCap) {
-      val es = edges.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      val dist = scala.collection.mutable.HashMap(seed -> 0L)
+    if (seedRows.count() == 0) seedRows.select(col("id").as("object_id"), col("dist"))
+    else DriverGraph.tiered(g.half, driverCap, extraIds = Array(seed)) { cg =>
+      val unreached = Long.MaxValue
+      var dist = Array.fill(cg.size)(unreached)
+      dist(cg.indexOf(seed)) = 0L
       var converged = false
       var rounds = 0
       while (!converged && rounds <= maxRounds) {
         // Jacobi round: every relax reads the PREVIOUS round's dists,
         // exactly like the oracle's d_k built from d_{k-1}
-        val updates = scala.collection.mutable.HashMap.empty[Long, Long]
-        es.foreach { case (u, v, w) =>
-          dist.get(u).foreach { du =>
-            val nd = du + w
-            if (nd < dist.getOrElse(v, Long.MaxValue) &&
-                nd < updates.getOrElse(v, Long.MaxValue)) updates(v) = nd
-          }
+        val next = dist.clone()
+        for (u <- 0 until cg.size if dist(u) != unreached; v <- cg.adj(u)) {
+          val nd = dist(u) + 1L + Math.floorMod(cg.ids(u) + cg.ids(v), 7L)
+          if (nd < next(v)) next(v) = nd
         }
-        converged = updates.isEmpty
-        if (!converged) { updates.foreach { case (v, nd) => dist(v) = nd }; rounds += 1 }
+        converged = java.util.Arrays.equals(next, dist)
+        if (!converged) { dist = next; rounds += 1 }
       }
       require(converged, s"sssp did not converge in $maxRounds rounds")
-      dist.toSeq.toDF("object_id", "dist").orderBy(col("object_id"))
-    } else {
+      cg.ids.indices.filter(dist(_) != unreached).map(i => (cg.ids(i), dist(i)))
+        .toDF("object_id", "dist").orderBy(col("object_id"))
+    } { _ =>
+      val half = g.half
+      val wCol = lit(1L) + pmod(col("a") + col("b"), lit(7L))
+      val edges = half.select(col("a").as("src"), col("b").as("dst"), wCol.as("w"))
+        .unionByName(half.select(col("b").as("src"), col("a").as("dst"), wCol.as("w")))
+        .localCheckpoint()
       var dist = seedRows
       var converged = false
       var rounds = 0
@@ -564,55 +468,53 @@ object GraphQueries extends QueryModule {
     * both engines derive the identical threshold from the identical
     * graph (a fixed K is degenerate across scale factors: the shipped
     * graphs' min degree ranges 3..38, so any constant either peels
-    * nothing or empties the graph at some SF). Two tiers on the
-    * bfs/pagerank discipline: edges under `driverCap` peel in-process
-    * (the per-round work is a degree histogram over a driver-sized
-    * edge list); above it, a checkpointed loop of
-    * degree-filter -> both-endpoint edge restriction, each round one
-    * shuffle on the node key. Output: (object_id, core_deg) for core
-    * survivors, core_deg = within-core degree >= K.
+    * nothing or empties the graph at some SF). Two tiers
+    * ([[DriverGraph]]): the driver tier peels in-process (the per-round
+    * work is a degree count over a driver-sized adjacency); the
+    * distributed tier is a checkpointed loop of degree-filter ->
+    * both-endpoint edge restriction, each round one shuffle on the node
+    * key. Output: (object_id, core_deg) for core survivors, core_deg =
+    * within-core degree >= K.
     */
-  private[graft] def kcore(s: org.apache.spark.sql.SparkSession, dir: String,
-                           driverCap: Long = 2000000L,
-                           kOverride: Option[Long] = None): org.apache.spark.sql.DataFrame = {
+  private[graft] def kcore(g: TripleStore.StagedGraph,
+                           driverCap: Long = DriverGraph.Cap,
+                           kOverride: Option[Long] = None): DataFrame = {
+    val s = g.half.sparkSession
     import s.implicits._
-    val g = T.staged(s, dir)
-    val half = g.half // distinct undirected (a < b), no self-loops
-    val und = half.select(col("a").as("src"), col("b").as("dst"))
-      .unionByName(half.select(col("b").as("src"), col("a").as("dst")))
-      .localCheckpoint()
-    val e2 = und.count() // = 2E
-    val v = und.select(col("src")).distinct().count()
-    if (v == 0) {
-      Seq.empty[(Long, Long)].toDF("object_id", "core_deg")
-    } else {
-      val k = kOverride.getOrElse(math.max(1L, (((e2 + v - 1) / v) * 3) / 4))
-      if (e2 / 2 <= driverCap) {
-        // driver tier: in-process peel over the collected edge list —
+    val empty = Seq.empty[(Long, Long)].toDF("object_id", "core_deg")
+    // e2 = 2E directed rows, v = non-isolated nodes
+    def kOf(e2: Long, v: Long) = kOverride.getOrElse(math.max(1L, (((e2 + v - 1) / v) * 3) / 4))
+    // g.half: distinct undirected (a < b), no self-loops
+    DriverGraph.tiered(g.half, driverCap) { cg =>
+      val v = cg.size
+      if (v == 0) empty
+      else {
         // the same integer comparisons as the distributed loop, so the
-        // tiers agree bit-for-bit (spec-pinned)
-        val edgeArr = und.collect().map(r => (r.getLong(0), r.getLong(1)))
-        val adj = scala.collection.mutable.HashMap
-          .empty[Long, scala.collection.mutable.ArrayBuffer[Long]]
-        edgeArr.foreach { case (a, b) =>
-          adj.getOrElseUpdate(a, scala.collection.mutable.ArrayBuffer.empty) += b
-        }
-        val alive = scala.collection.mutable.HashSet.empty[Long] ++ adj.keys
+        // tiers agree bit-for-bit
+        val k = kOf(cg.adj.map(_.length.toLong).sum, v)
+        val alive = Array.fill(v)(true)
+        def coreDeg(n: Int) = cg.adj(n).count(alive(_))
         var rounds = 0
         var changed = true
         while (changed && rounds <= KcoreMaxPeels) {
-          val drop = alive.filter(n => adj(n).count(alive.contains) < k)
+          val drop = (0 until v).filter(n => alive(n) && coreDeg(n) < k)
           changed = drop.nonEmpty
-          if (changed) { alive --= drop; rounds += 1 }
+          if (changed) { drop.foreach(alive(_) = false); rounds += 1 }
         }
         require(!changed, s"kcore did not converge in $KcoreMaxPeels peels")
-        alive.toSeq.sorted
-          .map(n => (n, adj(n).count(alive.contains).toLong))
+        (0 until v).filter(alive(_)).map(n => (cg.ids(n), coreDeg(n).toLong))
           .toDF("object_id", "core_deg")
           .orderBy(col("object_id"))
-      } else {
-        // distributed tier: each round is one degree aggregate + one
-        // both-endpoints restriction; lineage truncated per round
+      }
+    } { halfRows =>
+      val und = DriverGraph.mirrored(g.half).localCheckpoint()
+      val e2 = 2 * halfRows
+      val v = und.select(col("src")).distinct().count()
+      if (v == 0) empty
+      else {
+        // each round is one degree aggregate + one both-endpoints
+        // restriction; lineage truncated per round
+        val k = kOf(e2, v)
         var e = und
         var prevCount = e2
         var rounds = 0
@@ -676,17 +578,19 @@ object GraphQueries extends QueryModule {
   /** spo_jaccard_neighbors body. Two tiers, chosen by capped-graph
     * size, same answer (spec-pinned):
     *
-    *  - DRIVER tier (node dictionary ≤ [[JaccardNodeDriverCap]], edges
-    *    ≤ `edgeCap`): neighbor sets as packed bitsets, all-pairs
-    *    AND+popcount in one parallel in-process loop. A DENSE graph
-    *    makes any candidate-generation scheme output-bound — measured
-    *    at sf0.1 (1600 nodes, avg degree 91): hub-wedge counting
-    *    shuffles 28M wedge rows (6.4 s), PPJoin prefix filtering
-    *    degenerates exactly like tiny-vocab set dedup (7-17 s) — while
-    *    the bitset loop is 32M word-ops (<0.1 s). Same discipline as
-    *    the dedup mask tier / autoLabel: the per-NODE summary is
-    *    dictionary-sized, so solve it in-process instead of through
-    *    dozens of tiny-data jobs.
+    *  - DRIVER tier (kept edges within the [[DriverGraph]] cap, and at
+    *    most [[JaccardNodeDriverCap]] nodes among them): neighbor sets
+    *    as packed bitsets, all-pairs AND+popcount in one parallel
+    *    in-process loop. A DENSE graph makes any candidate-generation
+    *    scheme output-bound — measured at sf0.1 (1600 nodes, avg degree
+    *    91): hub-wedge counting shuffles 28M wedge rows (6.4 s), PPJoin
+    *    prefix filtering degenerates exactly like tiny-vocab set dedup
+    *    (7-17 s) — while the bitset loop is 32M word-ops (<0.1 s). Same
+    *    discipline as the dedup mask tier / autoLabel: the per-NODE
+    *    summary is dictionary-sized, so solve it in-process instead of
+    *    through dozens of tiny-data jobs. The node count is read off the
+    *    collected graph, so a collected graph with too many nodes still
+    *    runs the distributed tier.
     *  - DISTRIBUTED tier (above the caps): hub-wedge enumeration —
     *    candidates only from wedges (output-shaped, never all-pairs),
     *    per-pair intersection counts via one (na, nb) aggregate,
@@ -699,62 +603,23 @@ object GraphQueries extends QueryModule {
     * Jaccard = |∩| / (|A|+|B|-|∩|), exact ints divided ONCE as doubles
     * — bit-identical in the kernel, the distributed plan, and DuckDB.
     */
-  private[graft] def jaccardNeighbors(s: org.apache.spark.sql.SparkSession, dir: String,
-                                      edgeCap: Long = 2000000L): org.apache.spark.sql.DataFrame = {
+  private[graft] def jaccardNeighbors(g: TripleStore.StagedGraph,
+                                      edgeCap: Long = DriverGraph.Cap): DataFrame = {
+    val s = g.half.sparkSession
     val tau = 0.5
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // staged canonical half-edge set — already persisted; the degree
     // aggregate and the capped halfKept below both scan it
-    val half = T.staged(s, dir).half
-    val und = half.select(col("a").as("x"), col("b").as("y"))
-      .unionByName(half.select(col("b").as("x"), col("a").as("y")))
-    val hot = und.groupBy(col("x")).agg(count(lit(1)).as("d"))
+    val half = g.half
+    val hot = DriverGraph.mirrored(half).groupBy(col("src")).agg(count(lit(1)).as("d"))
       .filter(col("d") > MaxCoocDegree)
-      .select(col("x"))
+      .select(col("src"))
     val halfKept = half
-      .join(broadcast(hot.select(col("x").as("a"))), Seq("a"), "left_anti")
-      .join(broadcast(hot.select(col("x").as("b"))), Seq("b"), "left_anti")
+      .join(broadcast(hot.select(col("src").as("a"))), Seq("a"), "left_anti")
+      .join(broadcast(hot.select(col("src").as("b"))), Seq("b"), "left_anti")
       .select(col("a"), col("b"))
       .persist(lvl)
-    // gate order matters: the cheap edge count disqualifies first, so
-    // the node-count job (an extra shuffle over kept edges) only runs
-    // when the driver tier is actually reachable
-    def nNodes = halfKept.select(explode(array(col("a"), col("b"))).as("id"))
-      .distinct().count()
-    if (halfKept.count() <= edgeCap && nNodes <= JaccardNodeDriverCap) {
-      val edges = halfKept.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val ids = edges.iterator.flatMap(e => Iterator(e._1, e._2)).toArray.distinct.sorted
-      val idx = ids.zipWithIndex.toMap
-      val m = ids.length
-      val w = (m + 63) / 64
-      val bits = Array.fill(m)(new Array[Long](w))
-      edges.foreach { case (a, b) =>
-        val (ia, ib) = (idx(a), idx(b))
-        bits(ia)(ib >> 6) |= (1L << (ib & 63))
-        bits(ib)(ia >> 6) |= (1L << (ia & 63))
-      }
-      val deg = bits.map(_.map(java.lang.Long.bitCount(_).toLong).sum)
-      val out = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, Double)]
-      java.util.stream.IntStream.range(0, m).parallel().forEach { ia =>
-        val ba = bits(ia)
-        var ib = ia + 1
-        while (ib < m) {
-          val bb = bits(ib)
-          var inter = 0L
-          var k = 0
-          while (k < w) { inter += java.lang.Long.bitCount(ba(k) & bb(k)); k += 1 }
-          if (inter > 0L) {
-            val j = inter.toDouble / (deg(ia) + deg(ib) - inter).toDouble
-            if (j >= tau) out.add((ids(ia), ids(ib), j))
-          }
-          ib += 1
-        }
-      }
-      import s.implicits._
-      import scala.jdk.CollectionConverters._
-      out.asScala.toSeq.toDF("node_a", "node_b", "jaccard")
-        .orderBy(col("node_a"), col("node_b"))
-    } else {
+    def distributed: DataFrame = {
       val kept = halfKept.select(col("a").as("x"), col("b").as("y"))
         .unionByName(halfKept.select(col("b").as("x"), col("a").as("y")))
         .persist(lvl)
@@ -772,36 +637,45 @@ object GraphQueries extends QueryModule {
         .filter(col("jaccard") >= tau)
         .orderBy(col("node_a"), col("node_b"))
     }
+    DriverGraph.tiered(halfKept, edgeCap) { cg =>
+      if (cg.size > JaccardNodeDriverCap) distributed
+      else {
+        val m = cg.size
+        val w = (m + 63) / 64
+        val bits = Array.fill(m)(new Array[Long](w))
+        for (ia <- 0 until m; ib <- cg.adj(ia)) bits(ia)(ib >> 6) |= (1L << (ib & 63))
+        val deg = bits.map(_.map(java.lang.Long.bitCount(_).toLong).sum)
+        val out = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, Double)]
+        java.util.stream.IntStream.range(0, m).parallel().forEach { ia =>
+          val ba = bits(ia)
+          var ib = ia + 1
+          while (ib < m) {
+            val bb = bits(ib)
+            var inter = 0L
+            var k = 0
+            while (k < w) { inter += java.lang.Long.bitCount(ba(k) & bb(k)); k += 1 }
+            if (inter > 0L) {
+              val j = inter.toDouble / (deg(ia) + deg(ib) - inter).toDouble
+              if (j >= tau) out.add((cg.ids(ia), cg.ids(ib), j))
+            }
+            ib += 1
+          }
+        }
+        import s.implicits._
+        import scala.jdk.CollectionConverters._
+        out.asScala.toSeq.toDF("node_a", "node_b", "jaccard")
+          .orderBy(col("node_a"), col("node_b"))
+      }
+    } { _ => distributed }
   }
 
-  /** The same ten fixed-point iterations, unrolled in SQL. */
-  private val PagerankOracleSql: Option[String] = Some {
+  /** The ten fixed-point iterations of [[rank]], unrolled in SQL, with
+    * the teleport set S given as the SQL of its (id) rows. */
+  private def rankOracleSql(teleport: String, outCol: String): Option[String] = Some {
     val iters = (1 to 10).map { k =>
       s"""r$k AS (
         SELECT o.object_id AS id,
-          150000000000 + (85 * COALESCE(SUM(p.r // d.od), 0)) // 100 AS r
-        FROM objs o
-        LEFT JOIN uedges e ON e.dst = o.object_id
-        LEFT JOIN odeg d ON d.src = e.src
-        LEFT JOIN r${k - 1} p ON p.id = e.src
-        GROUP BY o.object_id)"""
-    }.mkString(",\n")
-    s"""$prelude,
-      uedges AS (SELECT DISTINCT source_id AS src, target_id AS dst FROM edges),
-      odeg AS (SELECT src, COUNT(*) AS od FROM uedges GROUP BY src),
-      r0 AS (SELECT object_id AS id, CAST(1000000000000 AS BIGINT) AS r FROM objs),
-      $iters
-    SELECT id AS object_id, CAST(r AS BIGINT) AS rank_scaled FROM r10
-    ORDER BY rank_scaled DESC, object_id LIMIT 20"""
-  }
-
-  /** [[PagerankOracleSql]] with the teleport term gated on the seed
-    * set — the same ten unrolled fixed-point iterations. */
-  private val PprOracleSql: Option[String] = Some {
-    val iters = (1 to 10).map { k =>
-      s"""r$k AS (
-        SELECT o.object_id AS id,
-          (CASE WHEN s.id IS NOT NULL THEN 150000000000 ELSE 0 END)
+          (CASE WHEN s.id IS NOT NULL THEN $RankTeleport ELSE 0 END)
             + (85 * COALESCE(SUM(p.r // d.od), 0)) // 100 AS r
         FROM objs o
         LEFT JOIN seeds s ON s.id = o.object_id
@@ -813,15 +687,13 @@ object GraphQueries extends QueryModule {
     s"""$prelude,
       uedges AS (SELECT DISTINCT source_id AS src, target_id AS dst FROM edges),
       odeg AS (SELECT src, COUNT(*) AS od FROM uedges GROUP BY src),
-      seeds AS (SELECT object_id AS id FROM objs
-                WHERE object_id % ${Betweenness.SeedMod} = 0
-                ORDER BY object_id LIMIT ${Betweenness.SeedCount}),
+      seeds AS ($teleport),
       r0 AS (SELECT o.object_id AS id,
-               CAST(CASE WHEN s.id IS NOT NULL THEN 1000000000000 ELSE 0 END AS BIGINT) AS r
+               CAST(CASE WHEN s.id IS NOT NULL THEN $RankInit ELSE 0 END AS BIGINT) AS r
              FROM objs o LEFT JOIN seeds s ON s.id = o.object_id),
       $iters
-    SELECT id AS object_id, CAST(r AS BIGINT) AS ppr_scaled FROM r10
-    ORDER BY ppr_scaled DESC, object_id LIMIT 20"""
+    SELECT id AS object_id, CAST(r AS BIGINT) AS $outCol FROM r10
+    ORDER BY $outCol DESC, object_id LIMIT 20"""
   }
 
   /** Synchronous label-propagation rounds for `spo_lpa`. FIXED-depth by
@@ -868,11 +740,11 @@ object GraphQueries extends QueryModule {
   /** spo_lpa bodies — [[LpaRounds]] synchronous label-propagation
     * rounds over the distinct undirected entity graph (labels init to
     * node id; each round every node adopts its neighborhood's most
-    * frequent label, ties to the smallest). Two tiers on the
-    * bfs/kcore/sssp discipline, spec-pinned equal:
+    * frequent label, ties to the smallest). Two tiers ([[DriverGraph]]),
+    * spec-pinned equal:
     *
-    *  - DRIVER tier (directed edges ≤ `driverCap`): the same recurrence
-    *    over the collected edge list in-process — pure integer argmax,
+    *  - DRIVER tier: the same recurrence over the collected graph
+    *    in-process — pure integer argmax,
     *    so the tiers agree bit-for-bit. Rationale as everywhere in
     *    §2.2: 4 rounds × 3 shuffle stages of a tiny graph is ~12 jobs
     *    of fixed overhead (measured 2.7 s at sf0.1) for work a single
@@ -902,45 +774,27 @@ object GraphQueries extends QueryModule {
     attachCommunitySizes(labels)
   }
 
-  /** Driver tier: identical recurrence over the collected (driver-cap-
-    * bounded) edge list. Dense-index adjacency; per round, one pass of
-    * neighbor-label counting with (count DESC, label ASC) argmax. */
+  /** Driver tier: identical recurrence over the collected graph — per
+    * round, one pass of neighbor-label counting with (count DESC,
+    * label ASC) argmax. */
   private def lpaDriver(s: org.apache.spark.sql.SparkSession,
-                        edges: Array[(Long, Long)], rounds: Int): org.apache.spark.sql.DataFrame = {
+                        g: DriverGraph.Collected, rounds: Int): DataFrame = {
     import s.implicits._
-    val ids = edges.iterator.map(_._1).toArray.distinct.sorted
-    val idx = new java.util.HashMap[Long, Int](ids.length * 2)
-    ids.zipWithIndex.foreach { case (id, i) => idx.put(id, i) }
-    val m = ids.length
-    val adjHeads = Array.fill(m)(new scala.collection.mutable.ArrayBuffer[Int]())
-    edges.foreach { case (a, b) =>
-      // loud contract failure instead of an opaque unboxing NPE
-      // (ADVICE r10): both call sites symmetrize, but a future caller
-      // passing a directed list should learn the contract, not crash
-      val bi = idx.getOrDefault(b, -1)
-      require(bi >= 0,
-        s"lpaDriver requires a SYMMETRIZED edge list: dst $b never appears as a src")
-      adjHeads(idx.get(a)) += bi
-    }
-    var lab: Array[Long] = ids.clone()
+    var lab: Array[Long] = g.ids.clone()
     for (_ <- 1 to rounds) {
-      val next = new Array[Long](m)
-      var v = 0
-      while (v < m) {
+      lab = g.adj.map { ns =>
         // most frequent neighbor label, ties to the smallest label
         val freq = new java.util.HashMap[Long, Int]()
-        adjHeads(v).foreach { u => freq.merge(lab(u), 1, (x, y) => x + y) }
+        ns.foreach { u => freq.merge(lab(u), 1, (x, y) => x + y) }
         var bestLab = Long.MaxValue; var bestC = -1
         freq.forEach { (l, c) =>
           if (c > bestC || (c == bestC && l < bestLab)) { bestLab = l; bestC = c }
         }
-        next(v) = bestLab
-        v += 1
+        bestLab
       }
-      lab = next
     }
     attachCommunitySizes(
-      ids.indices.map(i => (ids(i), lab(i))).toDF("id", "lab"))
+      g.ids.indices.map(i => (g.ids(i), lab(i))).toDF("id", "lab"))
   }
 
   /** Shared tail of both LPA tiers: attach community sizes and project
@@ -953,15 +807,11 @@ object GraphQueries extends QueryModule {
       .orderBy(col("object_id"))
   }
 
-  /** Tier dispatch for spo_lpa (the kcore/sssp shape): in-process under
-    * the cap, the distributed round loop above it. */
-  private[graft] def lpa(und: org.apache.spark.sql.DataFrame, rounds: Int,
-                         driverCap: Long = 2000000L): org.apache.spark.sql.DataFrame = {
-    val s = und.sparkSession
-    if (und.count() <= driverCap)
-      lpaDriver(s, und.collect().map(r => (r.getLong(0), r.getLong(1))), rounds)
-    else lpaDistributed(und, rounds)
-  }
+  /** Tier dispatch for spo_lpa over a canonical (a, b) half-edge set. */
+  private[graft] def lpa(half: DataFrame, rounds: Int,
+                         driverCap: Long = DriverGraph.Cap): DataFrame =
+    DriverGraph.tiered(half, driverCap)(lpaDriver(half.sparkSession, _, rounds))(
+      _ => lpaDistributed(DriverGraph.mirrored(half), rounds))
 
   /** Steps per walk for `spo_random_walks`. Fixed-depth like LPA: the
     * walk RECURRENCE is deterministic (hash-seeded choices), so a fixed
@@ -1036,10 +886,7 @@ object GraphQueries extends QueryModule {
     new graft.operators.SessionStaged[org.apache.spark.sql.DataFrame]((s, dir) =>
       graft.operators.StageCache.frame(s, dir, "spo_walks", 1,
         persist = Some(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)) {
-        val half = T.staged(s, dir).half
-        randomWalks(half.select(col("a").as("src"), col("b").as("dst"))
-          .unionByName(half.select(col("b").as("src"), col("a").as("dst"))),
-          WalkSteps)
+        randomWalks(T.staged(s, dir).half, WalkSteps)
       },
       df => { df.unpersist(); () })
 
@@ -1056,10 +903,9 @@ object GraphQueries extends QueryModule {
     * trajectories, which no seeded-RNG formulation survives across
     * engines. This is the DeepWalk/node2vec corpus-generation shape
     * (walks feed skip-gram training); uniformity comes from md5's
-    * avalanche across the step index. Two tiers on the house
-    * discipline:
+    * avalanche across the step index. Two tiers ([[DriverGraph]]):
     *
-    *  - DRIVER tier (directed edges ≤ `driverCap`): the same recurrence
+    *  - DRIVER tier: the same recurrence over the collected graph
     *    in-process — JVM MessageDigest md5 over the identical strings,
     *    hex-compared, so the tiers agree bit-for-bit (spec-pinned).
     *  - DISTRIBUTED tier: per step, one frontier⋈edges equi-join fans
@@ -1068,14 +914,12 @@ object GraphQueries extends QueryModule {
     *    driver state, per-step cost O(E) shuffle at any scale.
     *
     * Output: (walk_id, step, node) trajectories, step 0 = the start
-    * node itself. */
-  private[graft] def randomWalks(und: org.apache.spark.sql.DataFrame, steps: Int,
-                                 driverCap: Long = 2000000L): org.apache.spark.sql.DataFrame = {
-    if (und.count() <= driverCap)
-      walksDriver(und.sparkSession,
-        und.collect().map(r => (r.getLong(0), r.getLong(1))), steps)
-    else walksDistributed(und, steps)
-  }
+    * node itself, one walk per node of the canonical (a, b) half-edge
+    * set `half`. */
+  private[graft] def randomWalks(half: DataFrame, steps: Int,
+                                 driverCap: Long = DriverGraph.Cap): DataFrame =
+    DriverGraph.tiered(half, driverCap)(walksDriver(half.sparkSession, _, steps))(
+      _ => walksDistributed(DriverGraph.mirrored(half), steps))
 
   private[graft] def walksDistributed(und: org.apache.spark.sql.DataFrame, steps: Int): org.apache.spark.sql.DataFrame = {
     var cur = und.select(col("src").as("walk_id")).distinct()
@@ -1101,17 +945,11 @@ object GraphQueries extends QueryModule {
   }
 
   /** Driver tier: identical recurrence in-process over the collected
-    * edge list — MessageDigest md5 over the same strings, lowercase-hex
+    * graph — MessageDigest md5 over the same strings, lowercase-hex
     * compared. */
   private def walksDriver(s: org.apache.spark.sql.SparkSession,
-                          edges: Array[(Long, Long)], steps: Int): org.apache.spark.sql.DataFrame = {
+                          g: DriverGraph.Collected, steps: Int): DataFrame = {
     import s.implicits._
-    val adj = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[Long]]()
-    edges.foreach { case (a, b) =>
-      var buf = adj.get(a)
-      if (buf == null) { buf = scala.collection.mutable.ArrayBuffer.empty[Long]; adj.put(a, buf) }
-      buf += b
-    }
     val md = java.security.MessageDigest.getInstance("MD5")
     // table-driven hex: String.format here runs |V| x steps x degree x 16
     // times (~10M at sf0.1) and costs ~20 s of pure formatting
@@ -1128,32 +966,21 @@ object GraphQueries extends QueryModule {
       new String(out)
     }
     val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Long)]
-    val ids = edges.iterator.map(_._1).toArray.distinct.sorted
-    ids.foreach { start =>
+    // every collected node is an edge endpoint, so every walk can move
+    for (start <- g.ids.indices) {
       var node = start
-      rows += ((start, 0, node))
-      var t = 1
-      while (t <= steps) {
-        val ns = adj.get(node)
-        // loud contract failure instead of an opaque NPE (ADVICE r10):
-        // a walk can only stand on `node` by arriving over an edge, so
-        // a missing adjacency entry means the input was not symmetrized
-        require(ns != null,
-          s"walksDriver requires a SYMMETRIZED edge list: node $node has no outgoing entries")
-        var best: Long = Long.MaxValue
+      rows += ((g.ids(start), 0, g.ids(node)))
+      for (t <- 1 to steps) {
+        var best = -1
         var bestH: String = null
-        var i = 0
-        while (i < ns.length) {
-          val u = ns(i)
-          val h = hex(s"walk:$start:$t:$u")
-          if (bestH == null || h < bestH || (h == bestH && u < best)) {
+        for (u <- g.adj(node)) {
+          val h = hex(s"walk:${g.ids(start)}:$t:${g.ids(u)}")
+          if (bestH == null || h < bestH || (h == bestH && g.ids(u) < g.ids(best))) {
             bestH = h; best = u
           }
-          i += 1
         }
         node = best
-        rows += ((start, t, node))
-        t += 1
+        rows += ((g.ids(start), t, g.ids(node)))
       }
     }
     rows.toSeq.toDF("walk_id", "step", "node")
@@ -1180,8 +1007,8 @@ object GraphQueries extends QueryModule {
     * solve), so a broken contraction flips the driver's rows check
     * instead of hiding.
     *
-    *  - DRIVER tier (edges ≤ driverCap): Kruskal over the collected
-    *    list — one sort by (w, a, b) + union-find.
+    *  - DRIVER tier ([[DriverGraph]]): Kruskal over the collected
+    *    graph — one sort by (w, a, b) + union-find.
     *  - DISTRIBUTED tier (Borůvka): per round, attach component labels
     *    (two broadcast-or-shuffled equi-joins), keep cross-component
     *    edges, per-component min(struct(w, a, b, other)) — map-side
@@ -1189,40 +1016,34 @@ object GraphQueries extends QueryModule {
     *    graph with the SHARED [[Components.autoLabel]] solver and
     *    relabel. Forest and labels localCheckpoint per round (bounded
     *    lineage); every round is O(E) shuffle, rounds ≤ log₂ V.
+    *
+    * @param half0 canonical (a < b) undirected edge set
     */
-  private[graft] def mst(half0: org.apache.spark.sql.DataFrame,
-                         driverCap: Long = 2000000L,
-                         roundCap: Int = MstMaxRounds): org.apache.spark.sql.DataFrame = {
-    val s = half0.sparkSession
-    import s.implicits._
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val edges = half0.select(col("a"), col("b"),
-      (lit(1L) + (col("a") + col("b")) % 7L).as("w")).persist(lvl)
-    val m = edges.count()
-    val out =
-      if (m == 0) Seq.empty[(Long, Long, Long)].toDF("a", "b", "w")
-      else if (m <= driverCap)
-        mstDriver(s, edges.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))))
-      else mstDistributed(edges, roundCap)
-    edges.unpersist()
-    out
-  }
+  private[graft] def mst(half0: DataFrame,
+                         driverCap: Long = DriverGraph.Cap,
+                         roundCap: Int = MstMaxRounds): DataFrame =
+    DriverGraph.tiered(half0, driverCap)(mstDriver(half0.sparkSession, _)) { _ =>
+      val edges = half0.select(col("a"), col("b"),
+        (lit(1L) + (col("a") + col("b")) % 7L).as("w"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val out = mstDistributed(edges, roundCap)
+      edges.unpersist()
+      out
+    }
 
-  /** Kruskal over the driver-cap-bounded edge list: the unique forest
-    * under the (w, a, b) total order. The structural gate is implicit —
+  /** Kruskal over the collected graph: the unique forest under the
+    * (w, a, b) total order. The structural gate is implicit —
     * union-find accepts exactly |V| − |components| edges. */
   private def mstDriver(s: org.apache.spark.sql.SparkSession,
-                        edges: Array[(Long, Long, Long)]): org.apache.spark.sql.DataFrame = {
+                        g: DriverGraph.Collected): DataFrame = {
     import s.implicits._
-    val ids = edges.iterator.flatMap(e => Iterator(e._1, e._2)).toArray.distinct.sorted
-    val idx = new java.util.HashMap[Long, Int](ids.length * 2)
-    ids.zipWithIndex.foreach { case (id, i) => idx.put(id, i) }
-    val uf = new UnionFind(ids.length)
-    val kept = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-    edges.sortBy(e => (e._3, e._1, e._2)).foreach { case (a, b, w) =>
-      if (uf.union(idx.get(a), idx.get(b))) kept += ((a, b, w))
-    }
-    kept.toSeq.toDF("a", "b", "w").orderBy(col("a"), col("b"))
+    val edges = for (i <- g.adj.indices; j <- g.adj(i) if i < j)
+      yield (1L + (g.ids(i) + g.ids(j)) % 7L, i, j)
+    val uf = new UnionFind(g.size)
+    edges.sortBy { case (w, i, j) => (w, g.ids(i), g.ids(j)) }
+      .filter { case (_, i, j) => uf.union(i, j) }
+      .map { case (w, i, j) => (g.ids(i), g.ids(j), w) }
+      .toDF("a", "b", "w").orderBy(col("a"), col("b"))
   }
 
   private def mstDistributed(edges: org.apache.spark.sql.DataFrame,
@@ -1268,10 +1089,9 @@ object GraphQueries extends QueryModule {
         forest = forest
           .unionByName(sel.select(col("a"), col("b"), col("w")).distinct())
           .localCheckpoint()
-        val compEdges = sel.select(col("c").as("src"), col("other").as("dst"))
-          .unionByName(sel.select(col("other").as("src"), col("c").as("dst")))
-        val labels = Components.autoLabel(s, compEdges,
-          comp.select(col("comp").as("id")).distinct())
+        val labels = Components.autoLabel(s,
+          sel.select(col("c").as("src"), col("other").as("dst")),
+          Some(comp.select(col("comp").as("id")).distinct()))
         comp = comp.select(col("id"), col("comp").as("oldc"))
           .join(labels.select(col("id").as("oldc"), col("comp").as("newc")), "oldc")
           .select(col("id"), col("newc").as("comp")).localCheckpoint()
@@ -1388,26 +1208,16 @@ object GraphQueries extends QueryModule {
       // rounds, same per-round join/agg shape).
       "spo_components",
       (s, dir) => {
-        val tQ = System.nanoTime()
         // the component loop needs only the staged (id, id) half-edge
-        // set and the staged dictionary: normalize pairs before the
-        // distinct (one dedup shuffle over half the rows), then mirror —
-        // the union after distinct is shuffle-free.
+        // set and the staged dictionary. autoLabel: the (entity, entity)
+        // edge summary is dictionary-sized — far below the corpus — so
+        // connectivity solves on the driver in one collect when it fits,
+        // and falls through to the distributed propagation loop (regime
+        // notes on graft.graph.Components) above the cap
         val g = T.staged(s, dir)
-        val objs = g.dict
-        val halfE = g.half
-          .select(col("a").as("src"), col("b").as("dst"))
-        val undirected = halfE
-          .unionByName(halfE.select(col("dst").as("src"), col("src").as("dst")))
-        // autoLabel: the (entity, entity) edge summary is dictionary-
-        // sized — far below the corpus — so connectivity solves on the
-        // driver in one collect when it fits, and falls through to the
-        // distributed propagation loop (regime notes on
-        // graft.graph.Components) above the cap
-        val labels = Components.autoLabel(
-          s, undirected, objs.select(col("object_id").as("id")))
-        if (sys.env.contains("GRAFT_CC_DEBUG"))
-          System.err.println(s"[cc] loop-done total=${(System.nanoTime() - tQ) / 1e9}")
+        val labels = Components.autoLabel(s,
+          g.half.select(col("a").as("src"), col("b").as("dst")),
+          Some(g.dict.select(col("object_id").as("id"))))
         val sizes = labels.groupBy(col("comp")).agg(count(lit(1)).as("component_size"))
         labels.join(sizes, "comp")
           .select(col("id").as("object_id"), col("comp").as("component_id"), col("component_size"))
@@ -1445,8 +1255,8 @@ object GraphQueries extends QueryModule {
       // n, scale the per-node init mass down accordingly. Body in
       // [[pagerank]] so the spec can force both tiers.
       "spo_pagerank",
-      (s, dir) => pagerank(s, dir),
-      PagerankOracleSql
+      (s, dir) => pagerank(T.staged(s, dir)),
+      rankOracleSql("SELECT object_id AS id FROM objs", "rank_scaled")
     ),
 
     QueryDef(
@@ -1458,8 +1268,10 @@ object GraphQueries extends QueryModule {
       // unrolls the identical ten iterations. Body in [[ppr]] so the
       // spec can force both tiers.
       "spo_ppr",
-      (s, dir) => ppr(s, dir),
-      PprOracleSql
+      (s, dir) => ppr(T.staged(s, dir)),
+      rankOracleSql(s"""SELECT object_id AS id FROM objs
+        WHERE object_id % ${Betweenness.SeedMod} = 0
+        ORDER BY object_id LIMIT ${Betweenness.SeedCount}""", "ppr_scaled")
     ),
 
     QueryDef(
@@ -1559,7 +1371,7 @@ object GraphQueries extends QueryModule {
       // (gate included), a textbook double Brandes within float
       // tolerance, and closed forms on path/star/bridge graphs.
       "spo_betweenness",
-      (s, dir) => betweenness(s, dir),
+      (s, dir) => betweenness(T.staged(s, dir)),
       None
     ),
 
@@ -1573,7 +1385,7 @@ object GraphQueries extends QueryModule {
       // cross-engine (no double lands on a 6dp tie). DOUBLE at the
       // output boundary per the §5 no-bare-DECIMAL rule.
       "spo_closeness",
-      (s, dir) => closeness(s, dir),
+      (s, dir) => closeness(T.staged(s, dir)),
       Some(s"""$prelude,
         undir AS (
           SELECT source_id AS src, target_id AS dst FROM edges
@@ -1605,7 +1417,7 @@ object GraphQueries extends QueryModule {
       // the reachability/radius primitive. Body in [[bfs]] so the spec
       // can pin the driver tier against the distributed frontier loop.
       "spo_bfs",
-      (s, dir) => bfs(s, dir),
+      (s, dir) => bfs(T.staged(s, dir)),
       Some(s"""$prelude,
         undir AS (
           SELECT source_id AS src, target_id AS dst FROM edges
@@ -1631,7 +1443,7 @@ object GraphQueries extends QueryModule {
       // unrolls the same 12 peels, exact because the engine refuses to
       // answer past the bound.
       "spo_kcore",
-      (s, dir) => kcore(s, dir),
+      (s, dir) => kcore(T.staged(s, dir)),
       KcoreOracleSql
     ),
 
@@ -1642,7 +1454,7 @@ object GraphQueries extends QueryModule {
       // endpoint ids). Body in [[sssp]] (two tiers, loud round bound);
       // the oracle unrolls the same Jacobi rounds.
       "spo_sssp",
-      (s, dir) => sssp(s, dir),
+      (s, dir) => sssp(T.staged(s, dir)),
       SsspOracleSql
     ),
 
@@ -1656,12 +1468,7 @@ object GraphQueries extends QueryModule {
       // deterministic and exactly SQL-mirrorable — the oracle unrolls
       // the same rounds (rationale at [[LpaRounds]]).
       "spo_lpa",
-      (s, dir) => {
-        val half = T.staged(s, dir).half
-        lpa(half.select(col("a").as("src"), col("b").as("dst"))
-          .unionByName(half.select(col("b").as("src"), col("a").as("dst"))),
-          LpaRounds)
-      },
+      (s, dir) => lpa(T.staged(s, dir).half, LpaRounds),
       LpaOracleSql
     ),
 
@@ -1836,7 +1643,7 @@ object GraphQueries extends QueryModule {
       // neighborhoods"). Body in [[jaccardNeighbors]] so the spec can
       // pin both tiers equal; plan rationale there.
       "spo_jaccard_neighbors",
-      (s, dir) => jaccardNeighbors(s, dir),
+      (s, dir) => jaccardNeighbors(T.staged(s, dir)),
       Some(s"""$prelude,
         half AS (
           SELECT DISTINCT LEAST(source_id, target_id) AS a,

@@ -124,7 +124,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
     assert(p.contains("BroadcastHashJoin"), "triangles: dictionary joins not broadcast")
     // jaccard: force the distributed wedge tier (the driver bitset tier
     // returns a local result with no joins to inspect)
-    val pj = graft.graph.GraphQueries.jaccardNeighbors(spark, dir, edgeCap = 0L)
+    val pj = graft.graph.GraphQueries.jaccardNeighbors(graft.graph.TripleStore.staged(spark, dir), edgeCap = 0L)
       .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
     assert(!pj.contains("CartesianProduct"), "jaccard planned a cartesian")
     assert(!pj.contains("BroadcastNestedLoopJoin"), "jaccard planned a nested loop")

@@ -59,6 +59,53 @@ class DecodeFuzzSpec extends AnyFunSuite with SparkFixture {
     assert(errClasses.contains("bad_magic") || errClasses.contains("truncated"))
   }
 
+  /** Avro's zig-zag varint encoding of `n` (string/bytes lengths and
+    * array/map block counts). */
+  private def varint(n: Long): Array[Byte] = {
+    var z = (n << 1) ^ (n >> 63)
+    val out = Array.newBuilder[Byte]
+    while ((z & ~0x7FL) != 0L) { out += ((z & 0x7F) | 0x80).toByte; z >>>= 7 }
+    out += z.toByte
+    out.result()
+  }
+
+  private def decodeErrs(frames: Seq[Array[Byte]], schemaJson: String): Seq[String] = {
+    import spark.implicits._
+    val df = frames.zipWithIndex.map { case (b, i) => (i.toLong, b) }.toDF("row_id", "value")
+    val out = AvroCodec.decode(df, "value", schemaJson, passthrough = Seq("row_id"))
+      .collect().sortBy(_.getLong(0))
+    assert(out.length == frames.length, "decode must emit one row per input")
+    val errIdx = out.head.schema.fieldIndex("err")
+    out.map(_.getString(errIdx)).toSeq
+  }
+
+  test("hostile length prefixes are decode errors, not allocations") {
+    // a valid header, then a first length (string or bytes) or block
+    // count (array or map) claiming ~2 GB / ~1G items: avro sizes the
+    // buffer from the prefix, so without the codec's length limit each
+    // of these allocates gigabytes and the executor dies with an
+    // OutOfMemoryError instead of counting a decode_error
+    def record(field: String) =
+      s"""{"type":"record","name":"R","fields":[{"name":"f","type":$field}]}"""
+    val cases = Seq(
+      AvroQueries.SpoSchemaJson -> varint(2000000000L),
+      record("\"bytes\"") -> varint(2000000000L),
+      record("""{"type":"array","items":"string"}""") -> varint(1000000000L),
+      record("""{"type":"map","values":"string"}""") -> varint(1000000000L))
+    for ((schema, prefix) <- cases) {
+      val errs = decodeErrs(Seq(ConfluentFraming.frame(7, prefix ++ Array[Byte](1, 2, 3))), schema)
+      assert(errs == Seq("decode_error:SystemLimitException"), s"$schema: $errs")
+    }
+    // seeded random 0-60-byte bodies behind a valid header: every one
+    // decodes or is a decode_error (lengths here range up to ~2^63)
+    val body = Gen.choose(0, 60).flatMap(n => Gen.containerOfN[Array, Byte](n, Arbitrary.arbitrary[Byte]))
+    val frames = (0 until 4000).map(i =>
+      ConfluentFraming.frame(7, body.apply(params, Seed(7000L + i)).getOrElse(Array.empty)))
+    val errs = decodeErrs(frames, AvroQueries.SpoSchemaJson)
+    assert(errs.forall(e => e == null || e.startsWith("decode_error:")), errs.toSet)
+    assert(errs.contains("decode_error:SystemLimitException"), "no random length hit the limit")
+  }
+
   test("decodeMulti classifies unknown schema ids alongside body garbage") {
     import spark.implicits._
     val registry = new SchemaRegistry

@@ -18,11 +18,13 @@ class BetweennessSpec extends AnyFunSuite with SparkFixture {
       .distinct.toDF("a", "b")
   }
 
+  private def collected(edges: Seq[(Long, Long)], nodes: Seq[Long]) =
+    DriverGraph.build(edges.map(_._1).toArray, edges.map(_._2).toArray,
+      directed = false, nodes.toArray)
+
   private def viaDriver(edges: Seq[(Long, Long)], nodes: Seq[Long],
                         seeds: Seq[Long]): Map[Long, BigDecimal] = {
-    val sym = edges.flatMap { case (a, b) => Seq(a -> b, b -> a) }
-    val adj = sym.groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).toArray }
-    Betweenness.driverBrandes(adj, nodes, seeds)
+    Betweenness.driverBrandes(collected(edges, nodes), seeds)
   }
 
   private def viaDist(edges: Seq[(Long, Long)], nodes: Seq[Long],
@@ -126,7 +128,7 @@ class BetweennessSpec extends AnyFunSuite with SparkFixture {
 
   test("shipped graph: tiers agree bit-for-bit (mass gate included) and leaves score zero") {
     val dir = "/root/testdata/sf0.001"
-    val viaQuery = GraphQueries.betweenness(spark, dir).collect()
+    val viaQuery = GraphQueries.betweenness(TripleStore.staged(spark, dir)).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3), r.getLong(4)))
     assert(viaQuery.nonEmpty)
     viaQuery.foreach { case (v, deg, b, _, _) =>
@@ -145,7 +147,7 @@ class BetweennessSpec extends AnyFunSuite with SparkFixture {
     assert(bounds.head > 0L, "gate vacuous: zero bound on a non-trivial graph")
     // force the distributed tier: identical output INCLUDING the gate
     // (same DAG, same level counts, bit-identical δ totals)
-    val viaDistTier = GraphQueries.betweenness(spark, dir, driverCap = 0L).collect()
+    val viaDistTier = GraphQueries.betweenness(TripleStore.staged(spark, dir), driverCap = 0L).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3), r.getLong(4)))
     assert(viaDistTier.toSeq == viaQuery.toSeq)
   }
@@ -160,10 +162,9 @@ class BetweennessSpec extends AnyFunSuite with SparkFixture {
       (Seq((0L,1L),(0L,2L),(1L,2L),(2L,3L),(3L,4L),(3L,5L),(4L,5L)),
         (0L to 5L).toSeq, (0L to 5L).toSeq))
     for ((edges, nodes, seeds) <- cases) {
-      val sym = edges.flatMap { case (a, b) => Seq(a -> b, b -> a) }
-      val adj = sym.groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).toArray }
-      val d = Betweenness.driverBrandes(adj, nodes, seeds)
-      val (distSum, dagEdges, maxLev) = Betweenness.massReference(adj, nodes, seeds)
+      val g = collected(edges, nodes)
+      val d = Betweenness.driverBrandes(g, seeds)
+      val (distSum, dagEdges, maxLev) = Betweenness.massReference(g, seeds)
       val deltaMicros = d.valuesIterator
         .map(_.underlying.movePointRight(6).longValueExact()).sum
       val err = math.abs(deltaMicros - distSum * 1000000L)

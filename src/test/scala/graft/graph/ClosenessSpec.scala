@@ -21,9 +21,8 @@ class ClosenessSpec extends AnyFunSuite with SparkFixture {
 
   private def viaDriver(edges: Seq[(Long, Long)], nodes: Seq[Long],
                         seeds: Seq[Long]): Map[Long, BigDecimal] = {
-    val sym = edges.flatMap { case (a, b) => Seq(a -> b, b -> a) }
-    val adj = sym.groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).toArray }
-    Betweenness.driverCloseness(adj, nodes, seeds)
+    Betweenness.driverCloseness(DriverGraph.build(edges.map(_._1).toArray,
+      edges.map(_._2).toArray, directed = false, nodes.toArray), seeds)
   }
 
   private def viaDist(edges: Seq[(Long, Long)], nodes: Seq[Long],
@@ -144,12 +143,12 @@ class ClosenessSpec extends AnyFunSuite with SparkFixture {
 
   test("shipped graph: tiers agree bit-for-bit, everything non-negative") {
     val dir = "/root/testdata/sf0.001"
-    val viaQuery = GraphQueries.closeness(spark, dir).collect()
+    val viaQuery = GraphQueries.closeness(TripleStore.staged(spark, dir)).collect()
       .map(r => (r.getLong(0), r.getDouble(1)))
     assert(viaQuery.nonEmpty)
     viaQuery.foreach { case (v, c) => assert(c >= 0.0, s"node $v negative closeness") }
     assert(viaQuery.exists(_._2 > 0.0), "no node reaches any seed — vacuous graph")
-    val viaDistTier = GraphQueries.closeness(spark, dir, driverCap = 0L).collect()
+    val viaDistTier = GraphQueries.closeness(TripleStore.staged(spark, dir), driverCap = 0L).collect()
       .map(r => (r.getLong(0), r.getDouble(1)))
     assert(viaDistTier.toSeq == viaQuery.toSeq)
   }

@@ -64,7 +64,7 @@ class ComponentsSpec extends AnyFunSuite with SparkFixture {
     val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L), (11L, 12L), (12L, 10L), (40L, 41L))
     val nodes = Seq(1L, 2L, 3L, 10L, 11L, 12L, 40L, 41L, 99L)
     def auto(cap: Long) = Components.autoLabel(
-        spark, mirror(edges).toDF("src", "dst"), nodes.toDF("id"), driverCap = cap)
+        spark, mirror(edges).toDF("src", "dst"), Some(nodes.toDF("id")), driverCap = cap)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val expected = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L,
       12L -> 10L, 40L -> 40L, 41L -> 40L, 99L -> 99L)
@@ -79,7 +79,7 @@ class ComponentsSpec extends AnyFunSuite with SparkFixture {
     // must fail loudly rather than pick either wrong answer
     val thrown = intercept[IllegalArgumentException] {
       Components.autoLabel(spark,
-        mirror(Seq((1L, 7L))).toDF("src", "dst"), Seq(1L).toDF("id"))
+        mirror(Seq((1L, 7L))).toDF("src", "dst"), Some(Seq(1L).toDF("id")))
     }
     assert(thrown.getMessage.contains("endpoint"))
   }
@@ -89,7 +89,7 @@ class ComponentsSpec extends AnyFunSuite with SparkFixture {
     // tiny edge set, much larger node set: labels must be exact anyway
     val nodes = (0L until 500L)
     val got = Components.autoLabel(spark,
-        mirror(Seq((10L, 20L))).toDF("src", "dst"), nodes.toDF("id"))
+        mirror(Seq((10L, 20L))).toDF("src", "dst"), Some(nodes.toDF("id")))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got.size == 500)
     assert(got(20L) == 10L && got(10L) == 10L)
@@ -98,7 +98,7 @@ class ComponentsSpec extends AnyFunSuite with SparkFixture {
 
   test("pagerank driver tier equals the distributed power iteration") {
     val dir = "/root/testdata/sf0.001"
-    def ranks(cap: Long) = GraphQueries.pagerank(spark, dir, driverCap = cap)
+    def ranks(cap: Long) = GraphQueries.pagerank(TripleStore.staged(spark, dir), driverCap = cap)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val driver = ranks(Long.MaxValue)
     val dist = ranks(0L)
@@ -108,7 +108,7 @@ class ComponentsSpec extends AnyFunSuite with SparkFixture {
 
   test("ppr driver tier equals the distributed loop, and differs from global pagerank") {
     val dir = "/root/testdata/sf0.001"
-    def ranks(cap: Long) = GraphQueries.ppr(spark, dir, driverCap = cap)
+    def ranks(cap: Long) = GraphQueries.ppr(TripleStore.staged(spark, dir), driverCap = cap)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val driver = ranks(Long.MaxValue)
     val dist = ranks(0L)
@@ -119,14 +119,14 @@ class ComponentsSpec extends AnyFunSuite with SparkFixture {
     assert(driver.head._2 > 0L)
     // the teleport restriction must BITE: the personalized top-20 is not
     // the global top-20 on this graph (else the query adds nothing)
-    val global = GraphQueries.pagerank(spark, dir)
+    val global = GraphQueries.pagerank(TripleStore.staged(spark, dir))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(driver != global)
   }
 
   test("bfs driver tier equals the distributed frontier loop") {
     val dir = "/root/testdata/sf0.001"
-    def dists(cap: Long) = GraphQueries.bfs(spark, dir, driverCap = cap)
+    def dists(cap: Long) = GraphQueries.bfs(TripleStore.staged(spark, dir), driverCap = cap)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val driver = dists(Long.MaxValue)
     val dist = dists(0L)
@@ -137,7 +137,7 @@ class ComponentsSpec extends AnyFunSuite with SparkFixture {
 
   test("jaccard driver bitset tier equals the distributed wedge count") {
     val dir = "/root/testdata/sf0.001"
-    def pairs(cap: Long) = GraphQueries.jaccardNeighbors(spark, dir, edgeCap = cap)
+    def pairs(cap: Long) = GraphQueries.jaccardNeighbors(TripleStore.staged(spark, dir), edgeCap = cap)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     val driver = pairs(Long.MaxValue)
     val dist = pairs(0L)

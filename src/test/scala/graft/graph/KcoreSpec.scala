@@ -59,7 +59,7 @@ class KcoreSpec extends AnyFunSuite with SparkFixture {
     assert(expected.nonEmpty && expected.size == 8, s"block: $expected")
     assert(expected.values.forall(_ >= 2))
     for (cap <- Seq(2000000L /* driver tier */, 0L /* distributed tier */)) {
-      val got = GraphQueries.kcore(spark, dir, driverCap = cap,
+      val got = GraphQueries.kcore(TripleStore.staged(spark, dir), driverCap = cap,
           kOverride = Some(2L))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
       // ids -> names through the engine's own dictionary to compare
@@ -79,7 +79,7 @@ class KcoreSpec extends AnyFunSuite with SparkFixture {
     val dir = cascadeDir(40)
     for (cap <- Seq(2000000L /* driver tier */, 0L /* distributed tier */)) {
       val e = intercept[IllegalArgumentException] {
-        GraphQueries.kcore(spark, dir, driverCap = cap,
+        GraphQueries.kcore(TripleStore.staged(spark, dir), driverCap = cap,
           kOverride = Some(2L)).collect()
       }
       assert(e.getMessage.contains("converge"), s"cap=$cap")

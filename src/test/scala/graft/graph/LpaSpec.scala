@@ -1,7 +1,6 @@
 package graft.graph
 
 import graft.{SparkEntry, SparkFixture}
-import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins `spo_lpa` (fixed-round synchronous label propagation) against
@@ -28,10 +27,7 @@ class LpaSpec extends AnyFunSuite with SparkFixture {
   private def runLpa(edges: Seq[(Long, Long)], rounds: Int,
                      driverCap: Long = 2000000L): Map[Long, Long] = {
     import spark.implicits._
-    val half = edges.toDF("a", "b")
-    val und = half.select(col("a").as("src"), col("b").as("dst"))
-      .unionByName(half.select(col("b").as("src"), col("a").as("dst"))).distinct()
-    GraphQueries.lpa(und, rounds, driverCap).collect()
+    GraphQueries.lpa(edges.toDF("a", "b"), rounds, driverCap).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 

@@ -65,7 +65,7 @@ class SsspSpec extends AnyFunSuite with SparkFixture {
 
   private def run(dir: String, driverCap: Long = 2000000L,
                   maxRounds: Int = 30): Map[Long, Long] =
-    GraphQueries.sssp(spark, dir, driverCap, maxRounds).collect()
+    GraphQueries.sssp(TripleStore.staged(spark, dir), driverCap, maxRounds).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   test("both tiers match the independent Dijkstra on the shipped graph") {

@@ -1,7 +1,6 @@
 package graft.graph
 
 import graft.{SparkEntry, SparkFixture}
-import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins `spo_random_walks` (derandomized hash-seeded walks): tier
@@ -11,17 +10,15 @@ class WalksSpec extends AnyFunSuite with SparkFixture {
 
   private val dir = "/root/testdata/sf0.001"
 
-  private def und(edges: Seq[(Long, Long)]) = {
+  private def half(edges: Seq[(Long, Long)]) = {
     import spark.implicits._
-    val half = edges.toDF("a", "b")
-    half.select(col("a").as("src"), col("b").as("dst"))
-      .unionByName(half.select(col("b").as("src"), col("a").as("dst"))).distinct()
+    edges.toDF("a", "b")
   }
 
   test("both tiers trace identical trajectories on the shipped graph") {
     val g = TripleStore.staged(spark, dir)
     val edges = g.half.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val u = und(edges)
+    val u = half(edges)
     val driver = GraphQueries.randomWalks(u, GraphQueries.WalkSteps).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
     val dist = GraphQueries.randomWalks(u, GraphQueries.WalkSteps, driverCap = 0L).collect()
@@ -45,7 +42,7 @@ class WalksSpec extends AnyFunSuite with SparkFixture {
     // star: 1 joined to 2,3,4,5 — from node 1 the choice at each step
     // is among four neighbors; leaves bounce back to 1
     val edges = Seq((1L, 2L), (1L, 3L), (1L, 4L), (1L, 5L))
-    val got = GraphQueries.randomWalks(und(edges), 3).collect()
+    val got = GraphQueries.randomWalks(half(edges), 3).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
     val md = java.security.MessageDigest.getInstance("MD5")
     def hx(s: String) = md.digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString

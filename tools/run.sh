@@ -2,6 +2,8 @@
 # Dev launcher: run a graft main class without sbt startup overhead.
 # Usage: tools/run.sh graft.Verify /root/testdata/sf0.01 /tmp/verify_out
 CLS="$1"; shift
+# the checkout this script lives in, so a second checkout runs its own classes
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
 OPENS=""
 for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.reflect \
          java.base/java.io java.base/java.net java.base/java.nio java.base/java.util \
@@ -12,4 +14,4 @@ for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.refl
 done
 exec java $OPENS -Xmx${SPARK_DRIVER_MEM:-16g} \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" "$CLS" "$@"
+  -cp "$ROOT/target/scala-2.13/classes:/opt/spark/jars/*" "$CLS" "$@"
