@@ -1864,6 +1864,8 @@ object Dedup extends QueryModule {
           .filter(col("whiten_offdiag") < 0.01 && col("whiten_diag_err") < 0.01)
           .select(col("vec_id"), col("cluster_id"), col("cluster_size"),
             col("n_components"), col("whiten_offdiag"), col("whiten_diag_err"))
+          // the cross join drops semanticClusterFrame's order
+          .orderBy(col("vec_id"))
       },
       None
     ),

@@ -66,17 +66,32 @@ private[graft] object IndexFs {
     try { delete(dir); () }
     catch { case scala.util.control.NonFatal(_) => () }
 
-  /** Create an empty marker file (parents created as needed). The
-    * marker becomes VISIBLE atomically — at create on HDFS/local, at
-    * close on object stores — and carries its information in its NAME,
-    * so readers never see a partial state. `overwrite = false` keeps
-    * replays loud where the caller wants them. */
+  /** Create a marker file (parents created as needed). The marker
+    * becomes VISIBLE atomically — at create on HDFS/local, at close on
+    * object stores — but on HDFS/local its CONTENT lands only at close,
+    * so a reader (or a crash) between the two meets an empty or cut-off
+    * file. Callers whose readers trust the name alone use this as is;
+    * callers whose readers trust the content either end it with a
+    * footer the reader checks ([[ServingSnapshot]]) or stage it and
+    * [[rename]] it into place. `overwrite = false` keeps replays loud
+    * where the caller wants them. */
   def createMarker(file: String, content: String = "",
                    overwrite: Boolean = true): Unit = {
     val (fs, p) = resolve(file)
     val out = fs.create(p, overwrite)
     try { if (content.nonEmpty) out.write(content.getBytes("UTF-8")) }
     finally out.close()
+  }
+
+  /** Move `from` to the absent path `to` (parents created as needed),
+    * loud when the store refuses. Atomic on HDFS and local disk, so a
+    * file staged whole and renamed into place is never seen partial. */
+  def rename(from: String, to: String): Unit = {
+    val (fs, src) = resolve(from)
+    val dst = new Path(to)
+    fs.mkdirs(dst.getParent)
+    if (!fs.rename(src, dst))
+      throw new java.io.IOException(s"IndexFs.rename: could not move $from to $to")
   }
 
   /** Read a small metadata file fully (commit records, manifests). */

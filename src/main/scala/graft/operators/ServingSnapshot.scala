@@ -286,49 +286,46 @@ object ServingSnapshot {
   /** The newest COMPLETE snapshot — a manifest whose footer has not
     * landed yet (a publish in flight on HDFS/local, where `create`
     * exposes the file before the content) is skipped, giving the
-    * old-or-new semantics a mid-publish reader should see. Loud when
-    * nothing complete has been published.
+    * old-or-new semantics a mid-publish reader should see. Loud at once
+    * when no version has been published at all.
     *
-    * The version listing is taken once per attempt, so a concurrent
+    * After the first publish the directory always holds a complete
+    * version: publish only adds, and [[retire]] keeps the newest
+    * complete ones. A reader can still find nothing complete in one
+    * attempt, because its listing is taken once: a concurrent
     * publish+retire can delete every LISTED version after the listing
-    * while a newer complete version exists (ADVICE r16) — on
-    * exhaustion the attempt repeats AS LONG AS THE LISTING KEEPS
-    * CHANGING (each change proves a publisher made progress, so a
-    * fresh newest version exists to parse), with a short exponential
-    * backoff per lost round — a reader descheduled behind a
-    * fast-cycling publisher must stop racing it stride-for-stride or
-    * it can lose every round (observed in the race spec's adversarial
-    * tight loop). Throws only once two consecutive attempts saw the
-    * same version set (a STABLE listing with nothing complete really
-    * is an empty or all-torn snapshot directory, never a race) or the
-    * TIME budget is spent. The budget is wall-clock, not an attempt
-    * count: every retry requires a CHANGED listing — observed
-    * publisher progress — and under sustained machine load a reader
-    * can be descheduled between listing and parse for tens of ms per
-    * round, losing 50+ rounds to a tight-loop publisher (observed: the
-    * race spec failing under a 73-suite parallel run). An attempt cap
-    * turns scheduler pressure into a spurious outage; the time cap
-    * only fires when a snapshot directory churns continuously for the
-    * whole budget without ever exposing a parseable version, which no
-    * single-writer publish+retire cycle can sustain. */
+    * (ADVICE r16), and the very first publish is visible before its
+    * footer lands. So while the listing holds any version, the attempt
+    * repeats with a fresh listing, with a short exponential backoff per
+    * lost round (a reader descheduled behind a fast-cycling publisher
+    * must stop racing it stride-for-stride). The budget is wall-clock,
+    * not an attempt count: under machine load a reader can lose 50+
+    * rounds to a tight-loop publisher, and an attempt cap would turn
+    * that into a spurious outage. Only a directory whose versions stay
+    * incomplete for the whole budget throws, so such a directory (a
+    * crashed first publish never superseded, or a version
+    * `parseComplete` can never accept) costs every caller the full 30 s
+    * before the error, where a stable listing used to throw at once.
+    * A reader that meets the first publish in flight waits for it
+    * instead of failing. */
   def resolve(snapDir: String): Snapshot = {
     val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
     @annotation.tailrec
-    def loop(prev: Option[Seq[Long]], attempt: Int): Snapshot = {
+    def loop(attempt: Int): Snapshot = {
       val vs = versionsOn(snapDir)
       val hit = vs.reverseIterator
         .map(parseComplete(snapDir, _))
         .collectFirst { case Some(s) => s }
       hit match {
         case Some(s) => s
-        case None if System.nanoTime() < deadline && !prev.contains(vs) =>
+        case None if vs.nonEmpty && System.nanoTime() < deadline =>
           Thread.sleep(math.min(20L, 1L << math.min(attempt, 10)))
-          loop(Some(vs), attempt + 1)
+          loop(attempt + 1)
         case None => throw new IllegalArgumentException(
           s"ServingSnapshot.resolve: no complete snapshot published under $snapDir")
       }
     }
-    loop(None, attempt = 0)
+    loop(attempt = 0)
   }
 
   /** A specific snapshot version — the handle a long-lived reader holds

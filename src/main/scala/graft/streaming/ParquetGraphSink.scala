@@ -17,21 +17,47 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * not a driver-memory `lastAppliedBatchId`, so it SURVIVES DRIVER
   * RESTARTS:
   *
-  *  - each batch writes to its own `batch_id=<id>` directory in
-  *    OVERWRITE mode, so a replayed batch replaces its own previous
-  *    (possibly partial) write instead of double-appending;
-  *  - a persisted marker file (`_applied/<id>`) is created only after
-  *    the data commit; replays of fully-applied batches become pure
-  *    no-ops, and a crash between data write and marker write just
-  *    re-overwrites the same directory.
+  *  - each batch writes to its own `batch_id=<id>` directory, deleted
+  *    first, so a replayed batch replaces its own previous (possibly
+  *    partial) write instead of double-appending;
+  *  - the write is ONE job whose tasks write their parquet files
+  *    straight into that directory (`part-<partition>-<attempt>`, with
+  *    Spark's own parquet writer, so schema metadata and compression
+  *    are those of `write.parquet`); partition 0 writes a file even
+  *    when empty, so an all-malformed batch stays readable;
+  *  - the marker file `_applied/<id>`, put in place after the job
+  *    returns, is the ONE commit: its content lists the files the
+  *    job's successful task attempts wrote. It is written whole as
+  *    `_marker` inside the batch dir and renamed into `_applied`
+  *    (atomic on HDFS and local disk; object stores publish at close),
+  *    so no reader or restart ever meets a marker whose list is cut
+  *    off. Readers ([[graph]], [[compact]]) read exactly the listed
+  *    files, so a file left by a failed or speculative attempt, or by a
+  *    crash before the rename, is never read; it goes with its
+  *    directory at the next compaction. A replay of a fully-applied
+  *    batch is a no-op. An EMPTY marker is one an older sink wrote,
+  *    after Spark's committed writer had finished the dir: it admits
+  *    every file of its batch dir, as it did then.
+  *
+  * No FileOutputCommitter runs on this path. Its `_temporary` tree,
+  * task-commit renames and job commit would be a second commit behind
+  * the marker, and on a small micro-batch they are most of the write
+  * (the commit-by-manifest discipline of Spark's own FileStreamSink).
+  * The job's Hadoop conf reaches the tasks as one broadcast rather than
+  * a copy in every task closure.
   *
   * One-directory-per-batch accumulates a small-files problem
   * unboundedly, so [[compact]] periodically folds applied batches into
   * a generational base table:
   *
-  *  - the union of the previous base generation and all newly applied
-  *    batches is written to `base/gen=<n+1>` (overwrite mode — a
-  *    crashed earlier attempt at the same generation is replaced);
+  *  - the union of the previous base generation and the listed files
+  *    of all newly applied batches is written to `base/gen=<n+1>` with
+  *    Spark's committed writer in overwrite mode (a crashed earlier
+  *    attempt at the same generation is replaced). Compaction keeps
+  *    that writer because it runs once per fold, off the trigger path,
+  *    and because snapshot legs pin a generation directory whole
+  *    ([[leg]] lists it), which needs a directory holding only
+  *    committed files;
   *  - a commit marker (`_compaction/commit.gen=<n+1>.through=<m>` —
   *    the generation AND `through` = the highest folded batch id ride
   *    in the NAME, readers take the max-gen marker, so a racing reader
@@ -42,7 +68,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    superseded commit markers deleted.
   *
   * Crash anywhere in that sequence is safe: before the commit flip,
-  * readers still see old base + batch dirs and a re-run overwrites the
+  * readers still see old base + batch files and a re-run overwrites the
   * same next generation; after the flip, leftovers are invisible to
   * readers (ids <= `through` are excluded everywhere) and the next
   * compact()/cleanup reaps them. A replay of a batch whose id is
@@ -86,10 +112,35 @@ final class ParquetGraphSink(tablePath: String) extends Serializable {
     // a batch already folded into the base has no marker anymore — the
     // commit record refuses its replay instead
     if (batchId > commitState._2 && !IndexFs.exists(marker)) {
-      batch.select("subject", "predicate", "object", "ts_us")
-        .write.mode("overwrite").parquet(batchDir(batchId))
-      IndexFs.createMarker(marker)
+      val dir = batchDir(batchId)
+      IndexFs.delete(dir)
+      val files = ParquetGraphSink.writeParts(
+        batch.select("subject", "predicate", "object", "ts_us"), dir)
+      val staged = s"$dir/_marker"
+      IndexFs.createMarker(staged, files.mkString("\n"))
+      IndexFs.rename(staged, marker)
     }
+  }
+
+  /** Everything committed, as (subject, predicate, object, ts_us): the
+    * base generation `gen` (none when 0) plus the files the markers of
+    * batches `ids` list (every file of the dir for an older sink's
+    * empty marker). The batch dirs are listed whole, as one read root
+    * each, through [[ParquetGraphSink.CommittedOnly]], so a file no
+    * marker lists is never read. (Naming each file as a root instead
+    * would cost a parallel-listing job past 32 roots.) */
+  private def committed(spark: SparkSession, gen: Long, ids: Seq[Long]): DataFrame = {
+    val listed = ids.flatMap { id =>
+      val files = IndexFs.readSmall(s"$appliedDir/$id").split("\n").filter(_.nonEmpty)
+      (if (files.isEmpty) Seq(ParquetGraphSink.AnyFile) else files.toSeq)
+        .map(f => s"batch_id=$id/$f")
+    }
+    spark.read
+      .option("mapreduce.input.pathFilter.class",
+        classOf[ParquetGraphSink.CommittedOnly].getName)
+      .option(ParquetGraphSink.CommittedKey, listed.mkString("\n"))
+      .parquet((if (gen > 0) Seq(genDir(gen)) else Nil) ++ ids.map(batchDir): _*)
+      .select("subject", "predicate", "object", "ts_us")
   }
 
   /** Batch ids durably applied and not yet folded into the base. */
@@ -111,10 +162,7 @@ final class ParquetGraphSink(tablePath: String) extends Serializable {
     if (applied.isEmpty) return
     val newGen = gen + 1
     val newThrough = applied.max
-    val srcs = (if (gen > 0) Seq(genDir(gen)) else Nil) ++ applied.map(batchDir)
-    spark.read.parquet(srcs: _*)
-      .select("subject", "predicate", "object", "ts_us")
-      .write.mode("overwrite").parquet(genDir(newGen))
+    committed(spark, gen, applied).write.mode("overwrite").parquet(genDir(newGen))
     // the atomically-visible flip: the new record's NAME carries both
     // fields, readers take the max generation
     IndexFs.createMarker(s"$compactionDir/${commitMarker(newGen, newThrough)}",
@@ -188,20 +236,92 @@ final class ParquetGraphSink(tablePath: String) extends Serializable {
   }
 
   /** Materialize (objects, relationships) from everything durably
-    * applied — the current base generation plus unfolded batch
-    * directories, same TripleStore logic as the batch surface. */
+    * applied — the current base generation plus the files the markers
+    * of unfolded batches list, same TripleStore logic as the batch
+    * surface. */
   def graph(spark: SparkSession): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.functions.col
     val (gen, _) = commitState
-    val paths = (if (gen > 0) Seq(genDir(gen)) else Nil) ++
-      appliedBatchIds.map(batchDir)
-    require(paths.nonEmpty, s"no applied batches under $tablePath")
-    // only marker-committed batch directories and the committed base
-    // generation are listed: a crashed write may have left uncommitted
-    // partial directories behind
-    val t = spark.read.parquet(paths: _*)
-      .select(col("subject"), col("predicate"), col("object"), col("ts_us"))
+    val ids = appliedBatchIds
+    require(gen > 0 || ids.nonEmpty, s"no applied batches under $tablePath")
+    val t = committed(spark, gen, ids)
     val objs = graft.graph.TripleStore.objects(t)
     (objs, graft.graph.TripleStore.relationships(t, objs))
+  }
+}
+
+object ParquetGraphSink {
+  import org.apache.hadoop.conf.{Configurable, Configuration}
+  import org.apache.hadoop.fs.{Path, PathFilter}
+  import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskID, TaskType}
+  import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+  import org.apache.spark.TaskContext
+  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+  import org.apache.spark.util.SerializableConfiguration
+
+  /** Write `df` into `dir` as one parquet file per non-empty partition
+    * (partition 0 always writes one), in one job, with no output
+    * committer: each task attempt writes `part-<partition>-<attempt>`
+    * in place, `<attempt>` being the attempt's context-wide id, so a
+    * retry never meets its predecessor's file. Returns the names of the
+    * files the successful attempts wrote, the only ones a reader may
+    * trust. */
+  private def writeParts(df: DataFrame, dir: String): Seq[String] = {
+    val spark = df.sparkSession
+    val schema = df.schema
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
+    val conf = spark.sparkContext.broadcast(new SerializableConfiguration(job.getConfiguration))
+    val rows = df.queryExecution.toRdd
+    val rdd =
+      if (rows.getNumPartitions > 0) rows
+      else spark.sparkContext.parallelize(Seq.empty[InternalRow], 1)
+    val written = try spark.sparkContext.runJob(rdd,
+      (task: TaskContext, it: Iterator[InternalRow]) =>
+        if (task.partitionId() > 0 && !it.hasNext) None
+        else {
+          val attempt = new TaskAttemptContextImpl(conf.value.value, new TaskAttemptID(
+            new TaskID("graft", task.stageId(), TaskType.MAP, task.partitionId()),
+            task.attemptNumber()))
+          val name = f"part-${task.partitionId()}%05d-${task.taskAttemptId()}" +
+            factory.getFileExtension(attempt)
+          val out = factory.newInstance(s"$dir/$name", schema, attempt)
+          try it.foreach(out.write)
+          catch { case t: Throwable =>
+            try out.close() catch { case c: Throwable => t.addSuppressed(c) }
+            throw t
+          }
+          out.close()
+          Some(name)
+        })
+    finally conf.destroy()
+    written.toSeq.flatten
+  }
+
+  /** The read option carrying the committed files, one
+    * `batch_id=<id>/<file>` a line; `<file>` = [[AnyFile]] admits the
+    * whole dir. */
+  private val CommittedKey = "graft.sink.committed"
+  private val AnyFile = "*"
+
+  /** The listing filter of the sink's reads. Spark's file index builds
+    * it from `mapreduce.input.pathFilter.class`, with the read's options
+    * in its conf, and applies it to every file it lists. A file directly
+    * in a `batch_id=<id>` dir passes only when that batch's marker lists
+    * it, or the marker is an older sink's empty one; files elsewhere
+    * (the base generation) pass. */
+  final class CommittedOnly extends PathFilter with Configurable with Serializable {
+    @transient private var conf: Configuration = _
+    private var listed: Set[String] = Set.empty
+    override def setConf(c: Configuration): Unit = {
+      conf = c
+      listed = c.get(CommittedKey, "").split("\n").toSet
+    }
+    override def getConf: Configuration = conf
+    override def accept(p: Path): Boolean = {
+      val dir = p.getParent.getName
+      !dir.startsWith("batch_id=") || listed(s"$dir/${p.getName}") ||
+        listed(s"$dir/$AnyFile")
+    }
   }
 }

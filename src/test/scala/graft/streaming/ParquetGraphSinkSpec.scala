@@ -141,4 +141,125 @@ class ParquetGraphSinkSpec extends AnyFunSuite with SparkFixture {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tablePath))
     }
   }
+
+  test("the marker is the only commit: it lists exactly the written files, " +
+    "readers trust nothing else, and empty batches stay readable") {
+    import spark.implicits._
+    val tablePath = java.nio.file.Files.createTempDirectory("graft_sink_m").toString
+    def triples(ids: Range) =
+      ids.map(i => (s"s$i", "knows", s"o${i % 7}", i.toLong))
+        .toDF("subject", "predicate", "object", "ts_us")
+    def edgeSet(sink: ParquetGraphSink) = {
+      val (_, edges) = sink.graph(spark)
+      edges.collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3))).toSet
+    }
+    def names(dir: java.nio.file.Path) = {
+      import scala.jdk.CollectionConverters._
+      val s = java.nio.file.Files.list(dir)
+      try s.iterator().asScala.map(_.getFileName.toString).toSeq.sorted finally s.close()
+    }
+    def listed(id: Long) =
+      new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(tablePath, "_applied", id.toString)), "UTF-8")
+        .split("\n").filter(_.nonEmpty).toSeq.sorted
+    try {
+      val sink = new ParquetGraphSink(tablePath)
+      // three keys hashed into four partitions: at least one stays empty
+      val batch = triples(0 until 60).repartition(4, col("ts_us") % 3)
+      sink.merge(batch, 0L)
+      val dir0 = java.nio.file.Paths.get(tablePath, "triples", "batch_id=0")
+      val visible = names(dir0).filterNot(n => n.startsWith(".") || n.startsWith("_"))
+      assert(!names(dir0).contains("_temporary") && !names(dir0).contains("_SUCCESS"),
+        s"committer debris in a committed batch dir: ${names(dir0)}")
+      assert(visible.nonEmpty && visible.forall(_.startsWith("part-")))
+      assert(listed(0L) == visible, "the marker does not list exactly the written files")
+      val before = edgeSet(sink)
+      assert(before.size == 60)
+
+      // a stray file (a failed or speculative attempt's) is never read
+      val junk = java.nio.file.Files.createTempDirectory("graft_sink_junk")
+      triples(100 until 130).coalesce(1).write.mode("overwrite").parquet(junk.toString)
+      val junkPart = names(junk).find(n => n.startsWith("part-") && n.endsWith(".parquet")).get
+      java.nio.file.Files.copy(junk.resolve(junkPart), dir0.resolve("part-00007-999.snappy.parquet"))
+      org.apache.commons.io.FileUtils.deleteDirectory(junk.toFile)
+      assert(edgeSet(sink) == before, "an unlisted file in a batch dir leaked into the graph")
+
+      // an all-empty batch commits one readable file
+      sink.merge(triples(0 until 60).repartition(4).filter(col("ts_us") < 0), 1L)
+      assert(listed(1L).size == 1, s"empty batch committed ${listed(1L)}")
+      assert(sink.appliedBatchIds == Seq(0L, 1L))
+      assert(edgeSet(sink) == before, "the empty batch changed the graph")
+      // ... and an empty local batch (no partitions at all) too
+      sink.merge(triples(0 until 0), 2L)
+      assert(listed(2L).size == 1)
+      val emptyOnly = new ParquetGraphSink(s"$tablePath/only_empty")
+      emptyOnly.merge(triples(0 until 0), 0L)
+      assert(edgeSet(emptyOnly).isEmpty)
+
+      // past 32 read roots Spark lists them in a job: the filter that
+      // keeps the stray out travels with it
+      (3L to 33L).foreach(i => sink.merge(triples(0 until 0), i))
+      assert(edgeSet(sink) == before, "an unlisted file leaked through the parallel listing")
+
+      // compaction folds the listed files only and reaps the stray
+      sink.compact(spark)
+      assert(edgeSet(sink) == before, "compaction read an unlisted file")
+      assert(!java.nio.file.Files.exists(dir0), "the stray file's dir was not reaped")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tablePath))
+    }
+  }
+
+  test("the marker lands whole: a crash before it is in place leaves the batch " +
+    "unapplied, and an older sink's empty marker still admits its dir") {
+    import spark.implicits._
+    val tablePath = java.nio.file.Files.createTempDirectory("graft_sink_t").toString
+    def triples(ids: Range) =
+      ids.map(i => (s"s$i", "knows", s"o${i % 7}", i.toLong))
+        .toDF("subject", "predicate", "object", "ts_us")
+    def edgeCount(sink: ParquetGraphSink) = sink.graph(spark)._2.count()
+    val applied = java.nio.file.Paths.get(tablePath, "_applied")
+    def batchDir(id: Long) = java.nio.file.Paths.get(tablePath, "triples", s"batch_id=$id")
+    def names(dir: java.nio.file.Path) = {
+      import scala.jdk.CollectionConverters._
+      val s = java.nio.file.Files.list(dir)
+      try s.iterator().asScala.map(_.getFileName.toString).toSeq.sorted finally s.close()
+    }
+    try {
+      val sink = new ParquetGraphSink(tablePath)
+      sink.merge(triples(0 until 30), 0L)
+      sink.merge(triples(30 until 60).repartition(3), 1L)
+      assert(edgeCount(sink) == 60)
+      val marker1 = applied.resolve("1")
+      val list1 = new String(java.nio.file.Files.readAllBytes(marker1), "UTF-8")
+      assert(!names(batchDir(1L)).contains("_marker"), "the staged marker was left behind")
+
+      // the driver dies while staging batch 1's marker: the staged list
+      // is cut off and nothing is in `_applied`
+      java.nio.file.Files.delete(marker1)
+      java.nio.file.Files.deleteIfExists(applied.resolve(".1.crc"))
+      java.nio.file.Files.write(batchDir(1L).resolve("_marker"),
+        list1.take(list1.length / 2).getBytes("UTF-8"))
+      val restarted = new ParquetGraphSink(tablePath)
+      assert(restarted.appliedBatchIds == Seq(0L))
+      assert(edgeCount(restarted) == 30, "an unapplied batch was read")
+      // the replay after restart applies it whole
+      restarted.merge(triples(30 until 60).repartition(3), 1L)
+      assert(restarted.appliedBatchIds == Seq(0L, 1L))
+      assert(edgeCount(restarted) == 60, "the replayed batch was not re-applied")
+      assert(!names(batchDir(1L)).contains("_marker"))
+
+      // a batch committed by an older sink: Spark's committed writer,
+      // then an empty marker
+      triples(60 until 90).write.parquet(batchDir(2L).toString)
+      java.nio.file.Files.createFile(applied.resolve("2"))
+      assert(edgeCount(restarted) == 90, "an empty marker hid its committed dir")
+      restarted.merge(triples(0 until 10), 2L)
+      assert(edgeCount(restarted) == 90, "the replay of an applied batch was not a no-op")
+      restarted.compact(spark)
+      assert(restarted.appliedBatchIds.isEmpty && edgeCount(restarted) == 90)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tablePath))
+    }
+  }
 }
