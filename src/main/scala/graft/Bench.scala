@@ -180,26 +180,31 @@ object Bench {
       TierRec(name, sec, err, m1.zip(m0).map { case (a, b) => a - b }, "")
     }
     // bench tier -> StageCache entry prefixes, for post-phase event
-    // attribution (entry names are the frame/dir tier strings passed
-    // to StageCache at each build site)
-    val cacheTiersOf: Map[String, Seq[String]] = Map(
-      "graph" -> Seq("graph_"),
-      "walks" -> Seq("spo_walks"),
-      "dedup_features" -> Seq("dedup_feats", "dedup_ws"),
-      "wordset_pairs" -> Seq("wordset_pairs"),
-      "clusters" -> Seq("dedup_clusters"),
-      "angular" -> Seq("angular"), // exact-match guarded below
-      "band_index" -> Seq("band_index"),
-      "containment_ids" -> Seq("containment_"),
-      "chunk_vectors" -> Seq("chunk_blocking"),
-      "term_index" -> Seq("term_index"),
-      "rag_snapshot" -> Seq("rag_vec"),
-      "whiten" -> Seq("whiten", "angular_whitened"))
-    def benchTierFor(cacheTier: String): String =
-      if (cacheTier == "angular") "angular"
-      else cacheTiersOf.collectFirst {
-        case (bt, ps) if bt != "angular" && ps.exists(cacheTier.startsWith) => bt
-      }.getOrElse("(unattributed)")
+    // attribution: each build site exports the tier it passes to
+    // StageCache, and the longest matching prefix wins ("angular_whitened"
+    // is the whiten tier's, not "angular"'s)
+    val cacheTiersOf: Map[String, Seq[String]] = {
+      import graft.dedup.{AngularBlocking, BandIndex, Dedup}
+      import graft.similarity.Similarity
+      Map(
+        "graph" -> Seq(graft.graph.TripleStore.CacheTier),
+        "walks" -> Seq(graft.graph.GraphQueries.WalksCacheTier),
+        "dedup_features" -> Seq(Dedup.FeatsCacheTier, Dedup.WsCacheTier),
+        "wordset_pairs" -> Seq(Dedup.PairsCacheTier),
+        "clusters" -> Seq(Dedup.ClustersCacheTier),
+        "angular" -> Seq(AngularBlocking.CacheTier),
+        "band_index" -> Seq(BandIndex.CacheTier),
+        "containment_ids" -> Seq(Dedup.ContainmentCacheTier),
+        "chunk_vectors" -> Seq(Dedup.ChunkCacheTier),
+        "term_index" -> Seq(graft.textfn.TermIndex.CacheTier),
+        "rag_snapshot" -> Seq(Similarity.RagVecCacheTier),
+        "whiten" -> Seq(Similarity.WhitenCacheTier, AngularBlocking.WhitenedCacheTier))
+    }
+    def benchTierFor(cacheTier: String): String = {
+      val hits = for ((bt, ps) <- cacheTiersOf.toSeq; p <- ps if cacheTier.startsWith(p))
+        yield (p.length, bt)
+      if (hits.isEmpty) "(unattributed)" else hits.max._2
+    }
     // SPARK_GRAFT_ONLY dev runs skip staging entirely: a one-query dev
     // loop should not pay the unrelated tier builds; first-touch
     // staging inside the selected query is the accepted dev tradeoff

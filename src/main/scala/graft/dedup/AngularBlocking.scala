@@ -300,8 +300,11 @@ object AngularBlocking {
     Blocking(assigned, cellStats(assigned, deriveDims(assigned).getOrElse(1)))
   }
 
+  val CacheTier = "angular"
+  val WhitenedCacheTier = "angular_whitened"
+
   private val stagedCache = new graft.operators.SessionStaged[Blocking](
-    (s, dir) => buildBlockingCached(s, dir, "angular", 1)(
+    (s, dir) => buildBlockingCached(s, dir, CacheTier, 1)(
       graft.operators.Tables(s, dir).embeddings),
     releaseBlocking)
 
@@ -324,7 +327,7 @@ object AngularBlocking {
     * float-cast is deterministic; the whitened frame itself is built
     * (one eigensolve) by the Similarity staging it keys off. */
   private val stagedWhitenedCache = new graft.operators.SessionStaged[Blocking](
-    (s, dir) => buildBlockingCached(s, dir, "angular_whitened", 1)(
+    (s, dir) => buildBlockingCached(s, dir, WhitenedCacheTier, 1)(
       graft.similarity.Similarity.stagedWhitenFrame(s, dir)
         .select(col("vec_id"),
           transform(col("whitened"), x => x.cast("float")).as("embedding"))),

@@ -143,6 +143,7 @@ object BandIndex {
     * files. */
   final case class StagedIndex(dir: String, bands: DataFrame, features: DataFrame)
 
+  val CacheTier = "band_index"
   private val stagedIdx = new graft.operators.SessionStaged[StagedIndex](
     (s, dir) => {
       // the index directory rides the cross-invocation StageCache
@@ -151,7 +152,7 @@ object BandIndex {
       // pass instead of re-running the CPU-dominant 128-perm kernel
       // over 6/7 of the corpus
       val (idxDir, _) = graft.operators.StageCache.dir(
-          s, dir, "band_index", 1, "graft_bandidx") { into =>
+          s, dir, CacheTier, 1, "graft_bandidx") { into =>
         writeFeats(Dedup.stagedDocFeatures(s, dir).feats
           .filter(col("doc_id") % 7 =!= 0)
           .select(col("doc_id"), col("ss"), col("bands")),

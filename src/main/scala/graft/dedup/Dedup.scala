@@ -120,6 +120,8 @@ object Dedup extends QueryModule {
     */
   final case class StagedDocFeatures(feats: DataFrame, ws: DataFrame)
 
+  val FeatsCacheTier = "dedup_feats"
+  val WsCacheTier = "dedup_ws"
   private val stagedCache =
     new graft.operators.SessionStaged[StagedDocFeatures]((s, dir) => {
       val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
@@ -129,12 +131,12 @@ object Dedup extends QueryModule {
       // parquet read, bit-identical to the build by the write-then-
       // read-back contract
       StagedDocFeatures(
-        feats = graft.operators.StageCache.frame(s, dir, "dedup_feats", 1,
+        feats = graft.operators.StageCache.frame(s, dir, FeatsCacheTier, 1,
           persist = Some(lvl)) {
           shingleFeatures(Tables(s, dir).documents,
             withSig = true, withSim = true)
         },
-        ws = graft.operators.StageCache.frame(s, dir, "dedup_ws", 1,
+        ws = graft.operators.StageCache.frame(s, dir, WsCacheTier, 1,
           persist = Some(lvl)) {
           wordSets(Tables(s, dir).documents)
         })
@@ -158,6 +160,7 @@ object Dedup extends QueryModule {
     * whole build, not just the top-level frame. */
   private[graft] case class StagedPairs(pairs: DataFrame, internals: Seq[DataFrame])
 
+  val PairsCacheTier = "wordset_pairs"
   private val stagedPairsCache =
     new graft.operators.SessionStaged[StagedPairs]((s, dir) => {
       val internals = scala.collection.mutable.ListBuffer.empty[DataFrame]
@@ -165,7 +168,7 @@ object Dedup extends QueryModule {
       // (the most expensive staging stage at the 30x probe) never runs
       // and `internals` stays empty — teardown over an empty list is a
       // no-op, exactly right
-      val pairs = graft.operators.StageCache.frame(s, dir, "wordset_pairs", 1,
+      val pairs = graft.operators.StageCache.frame(s, dir, PairsCacheTier, 1,
           persist = Some(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)) {
           ngramJaccardPairsFromWs(stagedDocFeatures(s, dir).ws,
             track = df => { internals += df; () })
@@ -175,6 +178,8 @@ object Dedup extends QueryModule {
 
   private[graft] def stagedWordSetPairs(s: SparkSession, dir: String): DataFrame =
     stagedPairsCache.get(s, dir).pairs
+
+  val ClustersCacheTier = "dedup_clusters"
 
   /** Session-staged near-dup CLUSTER frame (doc_id, cluster_id,
     * cluster_size) — FIVE queries consume it (dedup_clusters,
@@ -187,7 +192,7 @@ object Dedup extends QueryModule {
     * consumer reads them. */
   private val stagedClustersCache =
     new graft.operators.SessionStaged[DataFrame]((s, dir) =>
-      graft.operators.StageCache.frame(s, dir, "dedup_clusters", 1,
+      graft.operators.StageCache.frame(s, dir, ClustersCacheTier, 1,
         persist = Some(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)) {
         clusterDocsFromWs(s, stagedDocFeatures(s, dir).ws,
           pairsOpt = Some(() => stagedWordSetPairs(s, dir)))
@@ -830,12 +835,14 @@ object Dedup extends QueryModule {
       }(Encoders.row(outSchema))
   }
 
+  val ChunkCacheTier = "chunk_blocking"
+
   /** Session-staged chunk-vector blocking (the [[stagedDocFeatures]]
     * discipline): the kernel pass + angular assignment are
     * tau-independent, built once per (session, dataset). */
   private val stagedChunkCache =
     new graft.operators.SessionStaged[AngularBlocking.Blocking]((s, dir) =>
-      AngularBlocking.buildBlockingCached(s, dir, "chunk_blocking", 1)(
+      AngularBlocking.buildBlockingCached(s, dir, ChunkCacheTier, 1)(
         chunkVectors(Tables(s, dir).documents)),
       AngularBlocking.releaseBlocking)
 
@@ -950,6 +957,8 @@ object Dedup extends QueryModule {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 
+  val ContainmentCacheTier = "containment_toks"
+
   /** Session-staged containment token frame (the stagedDocFeatures
     * discipline): the gate and bench run every query at least twice,
     * and each un-staged invocation would re-persist a fresh copy. */
@@ -959,7 +968,7 @@ object Dedup extends QueryModule {
       // helper's persist is a same-level no-op on that path and the
       // persist-of-record on a cache hit — one materialization serves
       // both the cache write and every consumer
-      graft.operators.StageCache.frame(s, dir, "containment_toks", 1,
+      graft.operators.StageCache.frame(s, dir, ContainmentCacheTier, 1,
         persist = Some(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)) {
         containmentTokFrame(stagedDocFeatures(s, dir).feats)
       }, tok => { tok.unpersist(); () })

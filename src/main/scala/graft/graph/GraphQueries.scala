@@ -870,6 +870,8 @@ object GraphQueries extends QueryModule {
     FROM pairs GROUP BY center, context
     ORDER BY center, context""")
 
+  val WalksCacheTier = "spo_walks"
+
   /** Session-staged walk trajectories (r18, guide §1.2): the
     * derandomized walks are a SHARED artifact — `spo_random_walks`
     * serves them and `spo_walk_skipgrams` generates training pairs
@@ -884,7 +886,7 @@ object GraphQueries extends QueryModule {
     * ordering (parquet read-back order is not the build order). */
   private val stagedWalksCache =
     new graft.operators.SessionStaged[org.apache.spark.sql.DataFrame]((s, dir) =>
-      graft.operators.StageCache.frame(s, dir, "spo_walks", 1,
+      graft.operators.StageCache.frame(s, dir, WalksCacheTier, 1,
         persist = Some(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)) {
         randomWalks(T.staged(s, dir).half, WalkSteps)
       },

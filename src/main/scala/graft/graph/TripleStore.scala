@@ -50,6 +50,9 @@ object TripleStore {
       half: DataFrame,      // persisted: canonical undirected (a<b) edges
       so: DataFrame)        // persisted: distinct (subject, object) pairs
 
+  /** The prefix of the staged graph frames' StageCache tiers. */
+  val CacheTier = "graph_"
+
   /** Staged artifacts for `dir`'s events table, built at most once per
     * (session, dir) — keying/lifetime discipline in
     * [[graft.operators.SessionStaged]]. */
@@ -63,21 +66,21 @@ object TripleStore {
     // the extraction nor the sort ever plans)
     import graft.operators.StageCache
     val lv = Some(lvl)
-    val t = StageCache.frame(s, dir, "graph_triples", 1, persist = lv) {
+    val t = StageCache.frame(s, dir, CacheTier + "triples", 1, persist = lv) {
       triplesFromEvents(graft.operators.Tables(s, dir).events)
     }
-    val objs = StageCache.frame(s, dir, "graph_objects", 1, persist = lv)(
+    val objs = StageCache.frame(s, dir, CacheTier + "objects", 1, persist = lv)(
       objects(t))
     val dict = objs.select(col("object_id"), col("name"))
     StagedGraph(
       triples = t,
       objects = objs,
       dict = dict,
-      relationships = StageCache.frame(s, dir, "graph_rel", 1, persist = lv)(
+      relationships = StageCache.frame(s, dir, CacheTier + "rel", 1, persist = lv)(
         relationships(t, objs)),
-      half = StageCache.frame(s, dir, "graph_half", 1, persist = lv)(
+      half = StageCache.frame(s, dir, CacheTier + "half", 1, persist = lv)(
         halfEdges(t, dict)),
-      so = StageCache.frame(s, dir, "graph_so", 1, persist = lv)(
+      so = StageCache.frame(s, dir, CacheTier + "so", 1, persist = lv)(
         t.select(col("subject"), col("object")).distinct()))
   }, g => {
     g.triples.unpersist(); g.objects.unpersist(); g.relationships.unpersist()

@@ -286,6 +286,7 @@ object Similarity extends QueryModule {
     ()
   }
 
+  val RagVecCacheTier = "rag_vec"
   private val stagedSnapshot =
     new graft.operators.SessionStaged[StagedSnapshot]((s, dir) => {
       // the sparse leg REUSES the session-staged TermIndex (the same
@@ -297,7 +298,7 @@ object Similarity extends QueryModule {
       // build-once per (dataset, code) on the machine, one k-means +
       // one partitioned write saved per later JVM
       val (vec, _) = graft.operators.StageCache.dir(
-          s, dir, "rag_vec", 1, "graft_ragvec") { into =>
+          s, dir, RagVecCacheTier, 1, "graft_ragvec") { into =>
         graft.similarity.VectorIndex.buildIvf(s,
           Tables(s, dir).embeddings.select(col("vec_id"), col("embedding")),
           into, nCells = SnapCells)
@@ -824,6 +825,8 @@ object Similarity extends QueryModule {
       .withColumn("whiten_mean_resid", lit(math.rint(meanResid * 1e9) / 1e9))
   }
 
+  val WhitenCacheTier = "whiten"
+
   /** Session-staged [[whiten]] frame per (session, dataset) — ONE
     * eigensolve serving both consumers: `embed_whiten` (the scalar
     * boundary projection) and `dedup_semantic_whitened` (SemDeDup-style
@@ -834,7 +837,7 @@ object Similarity extends QueryModule {
     * identity and the checkpoint-scan plan (no second covariance
     * pass). No teardown: checkpoint blocks are cleaner-managed. */
   private val stagedWhiten = new graft.operators.SessionStaged[org.apache.spark.sql.DataFrame](
-    (s, dir) => graft.operators.StageCache.frame(s, dir, "whiten", 1) {
+    (s, dir) => graft.operators.StageCache.frame(s, dir, WhitenCacheTier, 1) {
       // cache MISS/off: the one-per-session eigensolve + checkpoint;
       // HIT: one parquet read, no covariance pass at all
       whiten(s, graft.operators.Tables(s, dir).embeddings

@@ -981,6 +981,7 @@ object TermIndex {
   final case class StagedIndex(dir: String, postings: DataFrame,
                                termsRel: DataFrame, stats: (Double, Double))
 
+  val CacheTier = "term_index"
   private val staged = new graft.operators.SessionStaged[StagedIndex](
     (s, dir) => {
       // the index directory rides the cross-invocation StageCache
@@ -988,7 +989,7 @@ object TermIndex {
       // (dataset, code) on the machine; a later JVM's staging is three
       // relation opens
       val (idxDir, _) = graft.operators.StageCache.dir(
-          s, dir, "term_index", 1, "graft_termidx") { into =>
+          s, dir, CacheTier, 1, "graft_termidx") { into =>
         build(s, graft.operators.Tables(s, dir).documents
           .select(col("doc_id"), col("text")), into)
       }
