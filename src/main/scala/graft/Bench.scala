@@ -19,7 +19,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val runs = sys.env.get("SPARK_GRAFT_RUNS").map(_.toInt).getOrElse(2).max(1)
+    val runs = sys.env.get("SPARK_GRAFT_RUNS")
+      .map(GraftSession.intSetting("SPARK_GRAFT_RUNS", _)).getOrElse(2).max(1)
     val spark = GraftSession()
     // job-count probe: incremented on every job start; snapshotted
     // around each timed run so the artifact shows action counts

@@ -40,4 +40,11 @@ object GraftSession {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** A main's integer setting `name` from its text `raw`; a non-integer
+    * fails with both named, before anything is measured (a bare
+    * NumberFormatException names neither). */
+  def intSetting(name: String, raw: String): Int =
+    raw.toIntOption.getOrElse(
+      throw new IllegalArgumentException(s"$name must be an integer, got '$raw'"))
 }

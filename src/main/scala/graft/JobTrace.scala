@@ -13,7 +13,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
 object JobTrace {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse(sys.error("usage: JobTrace <query> [runs]"))
-    val runs = args.lift(1).map(_.toInt).getOrElse(2)
+    val runs = args.lift(1).map(GraftSession.intSetting("JobTrace runs", _)).getOrElse(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession()
 

@@ -7,6 +7,7 @@ import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWri
 import org.apache.avro.io.{BinaryDecoder, BinaryEncoder, DecoderFactory, EncoderFactory}
 import org.apache.avro.util.Utf8
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.functions.{col, length, octet_length, struct, to_json, udf, when}
 import org.apache.spark.sql.types._
 
 import scala.jdk.CollectionConverters._
@@ -372,9 +373,9 @@ object AvroCodec {
                   passthrough: Seq[String] = Nil): DataFrame =
     decodeFrames(df, valueCol, writerSchemas.get, readerSchemaJson, passthrough)
 
-  /** The one per-partition decode kernel behind [[decode]] and
-    * [[decodeMulti]]: `writerFor` maps a frame's schema id to its writer
-    * schema JSON (None = `unknown_schema_id`). */
+  /** The one per-partition decode kernel behind [[decode]],
+    * [[decodeMulti]] and [[decodeToJson]]: `writerFor` maps a frame's
+    * schema id to its writer schema JSON (None = `unknown_schema_id`). */
   private def decodeFrames(df: DataFrame, valueCol: String,
                            writerFor: Int => Option[String], readerSchemaJson: String,
                            passthrough: Seq[String]): DataFrame = {
@@ -427,105 +428,52 @@ object AvroCodec {
     }(Encoders.row(outSchema))
   }
 
+  /** The field types [[decodeToJson]] writes. */
+  private val JsonTypes: Set[Schema.Type] = Set(Schema.Type.STRING, Schema.Type.INT,
+    Schema.Type.LONG, Schema.Type.FLOAT, Schema.Type.DOUBLE, Schema.Type.BOOLEAN,
+    Schema.Type.ENUM)
+
+  /** `to_json` writes a character beyond the BMP raw; avro's jsonEncoder
+    * (Jackson's UTF-8 generator) escapes each of its two surrogates, as
+    * `\uD83D\uDE00`. */
+  private val escapeSurrogates = udf { (json: String) =>
+    val sb = new java.lang.StringBuilder(json.length + 16)
+    json.foreach(c => if (Character.isSurrogate(c)) sb.append(f"\\u${c.toInt}%04X") else sb.append(c))
+    sb.toString
+  }
+
   /** Avro binary -> canonical Avro JSON (mirror of `avro2json`,
-    * `src/KafkaConsumerCallback.cpp:42-68`), emitted as a `json` string
-    * column next to the decoded fields.
+    * `src/KafkaConsumerCallback.cpp:42-68`): the [[decode]] kernel, then
+    * Spark's `to_json` over the record's fields. Output: the passthrough
+    * columns + `json` + `err`, with `json` null exactly where `err` names
+    * the frame's failure class.
     *
-    * Hot-path note: avro-java's `jsonEncoder` regenerates the full JSON
-    * grammar on EVERY construction and cannot be re-targeted at a new
-    * stream, so the generic path pays that per row. For flat records of
-    * string/int/long/boolean fields (the reference's SPO shape) we emit
-    * the identical canonical JSON from a reused StringBuilder with
-    * Jackson-equivalent string escaping — same bytes, none of the
-    * per-row grammar work.
+    * `to_json` writes the bytes avro's `jsonEncoder` writes only for
+    * non-nullable string, int, long, float, double, boolean and enum
+    * fields, so any other field is refused on the driver, by name, before
+    * a job runs: avro wraps a union's value in a `{"type": value}`
+    * object, writes bytes and fixed as ISO-8859-1 strings, a logical type
+    * as its underlying primitive, and a container as its own JSON.
     */
   def decodeToJson(df: DataFrame, valueCol: String, schemaJson: String,
                    passthrough: Seq[String] = Nil): DataFrame = {
-    val inSchema = df.schema
-    val valIdx = inSchema.fieldIndex(valueCol)
-    val passIdx = passthrough.map(inSchema.fieldIndex)
-    val outSchema = StructType(
-      passthrough.map(inSchema(_)) :+ StructField("json", StringType, nullable = true))
-    val parsed = new Schema.Parser().parse(schemaJson)
-    val fastPath = parsed.getType == Schema.Type.RECORD &&
-      parsed.getFields.asScala.forall { f =>
-        f.schema().getType match {
-          case Schema.Type.STRING | Schema.Type.INT | Schema.Type.LONG |
-               Schema.Type.BOOLEAN => true
-          case _ => false
-        }
-      }
-    df.mapPartitions { iter =>
-      lengthLimits
-      val schema = new Schema.Parser().parse(schemaJson)
-      val reader = new GenericDatumReader[GenericRecord](schema)
-      val writer = new GenericDatumWriter[GenericRecord](schema)
-      val fieldNames = schema.getFields.asScala.map(_.name()).toArray
-      val isString = schema.getFields.asScala
-        .map(_.schema().getType == Schema.Type.STRING).toArray
-      var decoder: BinaryDecoder = null
-      var rec: GenericRecord = null
-      val sb = new java.lang.StringBuilder(256)
-      iter.map { row =>
-        val pass = passIdx.map(row.get)
-        val bytes = row.getAs[Array[Byte]](valIdx)
-        ConfluentFraming.unframe(bytes) match {
-          case ConfluentFraming.Framed(_, b, off, len) =>
-            try {
-              decoder = DecoderFactory.get().binaryDecoder(b, off, len, decoder)
-              rec = reader.read(rec, decoder)
-              val json =
-                if (fastPath) {
-                  sb.setLength(0)
-                  sb.append('{')
-                  var i = 0
-                  while (i < fieldNames.length) {
-                    if (i > 0) sb.append(',')
-                    sb.append('"').append(fieldNames(i)).append("\":")
-                    if (isString(i)) appendJsonString(sb, rec.get(i).toString)
-                    else sb.append(rec.get(i))
-                    i += 1
-                  }
-                  sb.append('}')
-                  sb.toString
-                } else {
-                  val out = new ByteArrayOutputStream(256)
-                  val jsonEnc = EncoderFactory.get().jsonEncoder(schema, out)
-                  writer.write(rec, jsonEnc)
-                  jsonEnc.flush()
-                  out.toString("UTF-8")
-                }
-              Row.fromSeq(pass :+ json)
-            } catch {
-              case _: Exception => Row.fromSeq(pass :+ null)
-            }
-          case _ => Row.fromSeq(pass :+ null)
-        }
-      }
-    }(Encoders.row(outSchema))
-  }
-
-  /** Append `s` as a JSON string literal with Jackson-default escaping
-    * (what avro's jsonEncoder emits): `"`, `\`, and control chars; the
-    * common controls as short escapes, the rest as `\u00XX`. */
-  private def appendJsonString(sb: java.lang.StringBuilder, s: String): Unit = {
-    sb.append('"')
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      c match {
-        case '"' => sb.append("\\\"")
-        case '\\' => sb.append("\\\\")
-        case '\b' => sb.append("\\b")
-        case '\t' => sb.append("\\t")
-        case '\n' => sb.append("\\n")
-        case '\f' => sb.append("\\f")
-        case '\r' => sb.append("\\r")
-        case _ if c < 0x20 => sb.append(f"\\u${c.toInt}%04x")
-        case _ => sb.append(c)
-      }
-      i += 1
-    }
-    sb.append('"')
+    val schema = new Schema.Parser().parse(schemaJson)
+    require(schema.getType == Schema.Type.RECORD, s"not a record schema: $schemaJson")
+    val fields = schema.getFields.asScala.map { f =>
+      require(f.schema().getLogicalType == null && JsonTypes(f.schema().getType),
+        s"decodeToJson cannot write field '${f.name()}' (${f.schema()}) as avro's JSON; " +
+          s"its fields must be one of ${JsonTypes.map(_.getName).toSeq.sorted.mkString(", ")}")
+      // avro's jsonEncoder writes a float as the double `f + 0d`
+      // (0.1f as 0.10000000149011612, -0.0f as 0.0)
+      if (f.schema().getType == Schema.Type.FLOAT) (col(f.name()).cast(DoubleType) + 0.0).as(f.name())
+      else col(f.name())
+    }.toSeq
+    val json = col("json")
+    decode(df, valueCol, schemaJson, passthrough)
+      .select(passthrough.map(col) :+
+        when(col("err").isNull, to_json(struct(fields: _*))).as("json") :+ col("err"): _*)
+      // only a row with a non-ASCII character can hold a surrogate pair
+      .withColumn("json",
+        when(octet_length(json) =!= length(json), escapeSurrogates(json)).otherwise(json))
   }
 }

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.avro.AvroCodec
 import graft.config.PipelineConfig
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -54,11 +55,11 @@ object KafkaSource {
     wire.select(col("key"), col("value"), col("topic"),
       col("partition"), col("offset").as("msg_offset"))
 
-  /** Wire rows → decoded rows via the SAME batch/streaming codec
-    * (`AvroStream.decode` = `AvroCodec.decode`): CP1 unframe, schema-id
-    * lookup, Avro decode, per-row error column. */
+  /** Wire rows → decoded rows via the SAME batch/streaming codec,
+    * `AvroCodec.decode`: CP1 unframe, Avro decode, per-row error
+    * column. */
   def decode(wire: DataFrame, schemaJson: String): DataFrame =
-    AvroStream.decode(normalizeWire(wire), "value", schemaJson,
+    AvroCodec.decode(normalizeWire(wire), "value", schemaJson,
       passthrough = Seq("key", "topic", "partition", "msg_offset"))
 }
 

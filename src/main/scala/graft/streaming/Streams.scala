@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.avro.AvroCodec
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -10,19 +9,14 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * The reference's consume loop is: poll -> unframe+decode (count
   * failures) -> transform -> persist. Here:
-  * `readStream -> AvroStream.decode -> [windowed agg | sessionize |
+  * `readStream -> AvroCodec.decode -> [windowed agg | sessionize |
   * error monitor] -> writeStream`, with watermarks replacing the manual
   * poll timeouts and state store replacing the hand-rolled SafeQueue
-  * pipeline (`src/SafeQueue.h`).
+  * pipeline (`src/SafeQueue.h`). The decode is the batch codec verbatim:
+  * its mapPartitions is stateless, so one code path serves batches and
+  * micro-batches.
   */
 object AvroStream {
-
-  /** Decode a streaming DataFrame's CP1-framed Avro `valueCol`. The
-    * batch codec is reused verbatim — mapPartitions is stateless, so the
-    * same per-partition-reader code path serves micro-batches. */
-  def decode(stream: DataFrame, valueCol: String, schemaJson: String,
-             passthrough: Seq[String] = Nil): DataFrame =
-    AvroCodec.decode(stream, valueCol, schemaJson, passthrough)
 
   /** The reference's failed-deserialization counter as a streaming
     * aggregation: running count per error status. */

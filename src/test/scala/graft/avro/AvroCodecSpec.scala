@@ -1,8 +1,15 @@
 package graft.avro
 
+import java.io.ByteArrayOutputStream
+
 import graft.SparkFixture
+import org.apache.avro.Schema
+import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
+import org.apache.avro.io.EncoderFactory
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
+import org.scalacheck.{Arbitrary, Gen}
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.jdk.CollectionConverters._
@@ -191,6 +198,72 @@ class AvroCodecSpec extends AnyFunSuite with SparkFixture {
     val json = AvroCodec.decodeToJson(encoded, "value", AvroQueries.SpoSchemaJson)
       .collect().head.getString(0)
     assert(json == "{\"subject\":\"a\\\"b\\\\c\",\"predicate\":\"x\\ny\\tz\",\"object\":\"ctl\\u0001end\"}")
+  }
+
+  test("decodeToJson writes exactly avro's jsonEncoder bytes for every accepted field type") {
+    import spark.implicits._
+    val params = Gen.Parameters.default
+    val symbols = Seq("A", "b_2", "Zz")
+    val types = Seq("string", "int", "long", "float", "double", "boolean",
+      s"""{"type":"enum","name":"E","symbols":[${symbols.map(s => s""""$s"""").mkString(",")}]}""")
+    // every char 0x00-0x7F, non-ASCII from Latin-1 to the BMP's end, and
+    // surrogate pairs (valid code points only: avro's UTF-8 encoder
+    // replaces a lone surrogate)
+    val piece: Gen[String] = Gen.frequency(
+      6 -> Gen.choose(0, 0x7F).map(_.toChar.toString),
+      2 -> Gen.oneOf('\u00e9', '\u00ff', '\u2028', '\u4e2d', '\ufeff', '\uffff').map(_.toString),
+      1 -> Gen.choose(0x10000, 0x10FFFF).map(cp => new String(Character.toChars(cp))))
+    val str = Gen.choose(0, 12).flatMap(Gen.listOfN(_, piece)).map(_.mkString)
+    def edge[T](special: Seq[T], any: Gen[T]): Gen[T] =
+      Gen.frequency(1 -> Gen.oneOf(special), 1 -> any)
+    val floats = edge(Seq(Float.NaN, Float.PositiveInfinity, Float.NegativeInfinity, -0.0f,
+      0.0f, Float.MinPositiveValue, 1e-40f, java.lang.Float.MIN_NORMAL, Float.MaxValue, 0.1f),
+      Arbitrary.arbitrary[Int].map(java.lang.Float.intBitsToFloat))
+    val doubles = edge(Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, -0.0,
+      0.0, Double.MinPositiveValue, 1e-310, java.lang.Double.MIN_NORMAL, Double.MaxValue, 0.1),
+      Arbitrary.arbitrary[Long].map(java.lang.Double.longBitsToDouble))
+    def value(schema: Schema): Gen[Any] = schema.getType match {
+      case Schema.Type.STRING => str
+      case Schema.Type.INT => edge(Seq(Int.MinValue, -1, 0, 1, Int.MaxValue), Arbitrary.arbitrary[Int])
+      case Schema.Type.LONG => edge(Seq(Long.MinValue, -1L, 0L, 1L, Long.MaxValue), Arbitrary.arbitrary[Long])
+      case Schema.Type.FLOAT => floats
+      case Schema.Type.DOUBLE => doubles
+      case Schema.Type.BOOLEAN => Arbitrary.arbitrary[Boolean]
+      case Schema.Type.ENUM => Gen.oneOf(symbols).map(new GenericData.EnumSymbol(schema, _))
+      case other => fail(s"no generator for $other")
+    }
+    // every type in one record, then records of 1-7 fields in seeded
+    // random type order
+    val fieldTypes = types +: (1 to 7).map { i =>
+      Gen.choose(1, 7).flatMap(Gen.listOfN(_, Gen.oneOf(types)))
+        .apply(params, Seed(40L + i)).get
+    }
+    fieldTypes.zipWithIndex.foreach { case (fts, k) =>
+      val schemaJson = AvroCodec.recordSchemaJson(s"r$k", fts.zipWithIndex.map {
+        case (t, i) => s"f$i" -> t })
+      val schema = new Schema.Parser().parse(schemaJson)
+      val binWriter = new GenericDatumWriter[GenericRecord](schema)
+      val expected = (0 until 60).map { i =>
+        val rec = new GenericData.Record(schema)
+        schema.getFields.asScala.foreach(f =>
+          rec.put(f.pos(), value(f.schema()).apply(params, Seed(1000L * k + 10L * i + f.pos())).get))
+        val bin = new ByteArrayOutputStream()
+        val binEnc = EncoderFactory.get().binaryEncoder(bin, null)
+        binWriter.write(rec, binEnc)
+        binEnc.flush()
+        val js = new ByteArrayOutputStream()
+        val jsEnc = EncoderFactory.get().jsonEncoder(schema, js)
+        binWriter.write(rec, jsEnc)
+        jsEnc.flush()
+        (i.toLong, ConfluentFraming.frame(k, bin.toByteArray), js.toString("UTF-8"))
+      }
+      val got = AvroCodec.decodeToJson(expected.map(e => (e._1, e._2)).toDF("row_id", "value"),
+          "value", schemaJson, passthrough = Seq("row_id"))
+        .collect().map(r => r.getLong(0) -> r.getAs[String]("json")).toMap
+      expected.foreach { case (i, _, json) =>
+        assert(got(i) == json, s"schema $schemaJson, record $i")
+      }
+    }
   }
 
   test("complex types roundtrip: enum, array, map, nested record, fixed, null unions") {

@@ -7,10 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Fuzzes the full decode surface the way FramingPropertySpec fuzzes
   * the wire layer: ARBITRARY bytes behind a valid CP1 header must
-  * total-function through `AvroCodec.decode`/`decodeMulti` — one output
-  * row per input row, every failure CLASSIFIED into the err taxonomy,
-  * never a thrown exception (the reference's consume loop counts
-  * failures rather than crashing, `src/main.cpp:247-251`).
+  * total-function through `AvroCodec.decode`/`decodeMulti`/`decodeToJson`
+  * — one output row per input row, every failure CLASSIFIED into the err
+  * taxonomy, never a thrown exception (the reference's consume loop
+  * counts failures rather than crashing, `src/main.cpp:247-251`).
   */
 class DecodeFuzzSpec extends AnyFunSuite with SparkFixture {
 
@@ -57,6 +57,37 @@ class DecodeFuzzSpec extends AnyFunSuite with SparkFixture {
     // the garbage corpus must actually exercise the classes
     assert(errClasses.exists(_.startsWith("decode_error:")), "no decode_error seen")
     assert(errClasses.contains("bad_magic") || errClasses.contains("truncated"))
+    // decodeToJson runs the same kernel: the same class on every frame,
+    // and a json string exactly where the frame decoded
+    val json = AvroCodec.decodeToJson(df, "value", AvroQueries.SpoSchemaJson,
+      passthrough = Seq("row_id")).collect().map(r =>
+        r.getLong(0) -> (r.getAs[String]("json"), r.getAs[String]("err"))).toMap
+    assert(json.size == frames.length, "decodeToJson must emit one row per input")
+    out.foreach { r =>
+      val (js, err) = json(r.getLong(0))
+      assert(err == r.getString(errIdx), s"row ${r.getLong(0)}")
+      assert((js == null) == (err != null), s"row ${r.getLong(0)}: json $js, err $err")
+    }
+  }
+
+  test("decodeToJson refuses, by field and before any job, what to_json cannot write as avro's JSON") {
+    import spark.implicits._
+    val frames = Seq((0L, ConfluentFraming.frame(7, Array[Byte](2, 65)))).toDF("row_id", "value")
+    val group = "decodeToJson-refusal"
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try {
+      Seq("""["null","string"]""", "\"bytes\"",
+          """{"type":"long","logicalType":"timestamp-micros"}""").foreach { t =>
+        val schemaJson = s"""{"type":"record","name":"R","fields":[
+          |{"name":"ok","type":"string"},{"name":"odd_field","type":$t}]}""".stripMargin
+        val e = intercept[IllegalArgumentException] {
+          AvroCodec.decodeToJson(frames, "value", schemaJson, passthrough = Seq("row_id"))
+        }
+        assert(e.getMessage.contains("'odd_field'"), e.getMessage)
+      }
+    } finally sc.clearJobGroup()
+    assert(sc.statusTracker.getJobIdsForGroup(group).isEmpty, "a job ran before the refusal")
   }
 
   /** Avro's zig-zag varint encoding of `n` (string/bytes lengths and

@@ -9,7 +9,7 @@ import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
 
 /** The Avro decode kernel's per-record cost, single-threaded and warm,
-  * in three numbers over the same CP1-framed 4-field SPO frames:
+  * in four numbers over the same CP1-framed 4-field SPO frames:
   *
   *  - `reader`: unframe + a reused `GenericDatumReader` in a plain loop,
   *    the codec's own floor;
@@ -17,7 +17,10 @@ import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
   *    the engine's floor;
   *  - `decode_multi`: `AvroCodec.decodeMulti` over that frame to the
   *    same sink; its excess over `scan` is what decoding costs inside
-  *    the engine (conversions included).
+  *    the engine (conversions included);
+  *  - `decode_to_json`: `AvroCodec.decodeToJson` over that frame to the
+  *    same sink; its excess over `decode_multi` is what writing each
+  *    record as avro's JSON costs.
   *
   * Each number is the median of `passes` timed passes after `warmup`
   * untimed ones, with the spread (min-max) beside it.
@@ -71,14 +74,18 @@ object DecodeKernelBench {
         df.write.format("noop").mode("overwrite").save()
       val scanUs = timed(warmup, passes, records)(noop(framed))
       val decodeUs = timed(warmup, passes, records)(noop(decoded))
+      val jsonUs = timed(warmup, passes, records)(
+        noop(AvroCodec.decodeToJson(framed, "value", schemaJson)))
 
       println(f"decode kernel: $records SPO frames, $passes timed passes after $warmup " +
         f"(checksum $sink)")
-      Seq("reader" -> readerUs, "scan" -> scanUs, "decode_multi" -> decodeUs).foreach {
+      Seq("reader" -> readerUs, "scan" -> scanUs, "decode_multi" -> decodeUs,
+          "decode_to_json" -> jsonUs).foreach {
         case (name, us) => println(f"${name}_us_per_rec ${median(us)}%.3f " +
           f"(min ${us.min}%.3f, max ${us.max}%.3f)")
       }
       println(f"decode_multi_net_us_per_rec ${median(decodeUs) - median(scanUs)}%.3f")
+      println(f"json_step_us_per_rec ${median(jsonUs) - median(decodeUs)}%.3f")
     } finally spark.stop()
   }
 

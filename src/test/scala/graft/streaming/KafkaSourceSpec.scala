@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.SparkFixture
-import graft.avro.AvroQueries
+import graft.avro.{AvroCodec, AvroQueries}
 import graft.config.PipelineConfig
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -36,7 +36,7 @@ class KafkaSourceSpec extends AnyFunSuite with SparkFixture {
     val viaKafka = KafkaSource.decode(wire, AvroQueries.EventsSchemaJson)
       .withColumn("key", col("key").cast("string"))
       .collect().map(_.toString).sorted
-    val viaFile = AvroStream.decode(
+    val viaFile = AvroCodec.decode(
         log.select(col("key"), col("value"), col("topic"), col("partition"), col("msg_offset")),
         "value", AvroQueries.EventsSchemaJson,
         passthrough = Seq("key", "topic", "partition", "msg_offset"))

@@ -20,7 +20,7 @@ class ParquetGraphSinkSpec extends AnyFunSuite with SparkFixture {
       val framed = AvroCodec.encode(triples, AvroQueries.SpoSchemaJson, 2,
         passthrough = Seq("ts_us")).collect()
       val input = MemoryStream[(Long, Array[Byte])]
-      val decoded = AvroStream.decode(
+      val decoded = AvroCodec.decode(
         input.toDF().toDF("ts_us", "value"), "value", AvroQueries.SpoSchemaJson,
         passthrough = Seq("ts_us"))
         .filter(col("err").isNull)

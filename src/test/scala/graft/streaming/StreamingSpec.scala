@@ -21,7 +21,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val input = MemoryStream[Array[Byte]]
-    val decoded = AvroStream.decode(input.toDF().withColumnRenamed("value", "value"),
+    val decoded = AvroCodec.decode(input.toDF().withColumnRenamed("value", "value"),
       "value", AvroQueries.SpoSchemaJson)
     val monitor = AvroStream.errorMonitor(decoded)
     val q = monitor.writeStream.format("memory").queryName("mon").outputMode("complete").start()
@@ -65,7 +65,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     val framed = AvroCodec.encode(triples, AvroQueries.SpoSchemaJson, 2,
       passthrough = Seq("ts_us")).collect()
     val input = MemoryStream[(Long, Array[Byte])]
-    val decoded = AvroStream.decode(
+    val decoded = AvroCodec.decode(
       input.toDF().toDF("ts_us", "value"), "value", AvroQueries.SpoSchemaJson,
       passthrough = Seq("ts_us"))
       .filter(col("err").isNull)
