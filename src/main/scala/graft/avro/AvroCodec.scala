@@ -2,13 +2,18 @@ package graft.avro
 
 import java.io.ByteArrayOutputStream
 
-import org.apache.avro.{Schema, SystemLimitException}
-import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
+import org.apache.avro.{LogicalTypes, Schema, SystemLimitException}
+import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericFixed, GenericRecord}
 import org.apache.avro.io.{BinaryDecoder, BinaryEncoder, DecoderFactory, EncoderFactory}
 import org.apache.avro.util.Utf8
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Encoders, GraftSqlBridge, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, Generator, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData, RebaseDateTime}
 import org.apache.spark.sql.functions.{col, length, octet_length, struct, to_json, udf, when}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import scala.jdk.CollectionConverters._
 
@@ -16,13 +21,13 @@ import scala.jdk.CollectionConverters._
   * family the reference uses through libserdes;
   * `src/KafkaConsumerCallback.cpp:70-116`).
   *
-  * Spark-side shape: encode/decode run in `mapPartitions` with ONE
-  * reader/writer + reused decoder/encoder/record per partition — the
-  * per-record cost is pure (de)serialization, no allocation churn, and
-  * the operation is embarrassingly parallel across a 1000-executor
-  * cluster. mapPartitions (not a per-row UDF) is deliberate: an opaque
-  * binary codec can't be expressed as a Catalyst expression tree, and
-  * partition-level reuse is the fastest JVM shape for it.
+  * Decoding is one Catalyst generator, [[DecodeFrames]], that writes
+  * every field as a Catalyst value (`UTF8String` from the `Utf8` bytes,
+  * micros, days, `Decimal`, `ArrayData`, `MapData`, `InternalRow`), so a
+  * record costs the avro read plus one copy into the `UnsafeRow`, with no
+  * external `Row`, `java.lang.String` or encoder in between, on batch and
+  * streaming plans alike. `encode` runs in `mapPartitions` over external
+  * `Row`s.
   */
 object AvroCodec {
 
@@ -46,7 +51,7 @@ object AvroCodec {
     * that never touch `GraftSession` alike — and makes avro re-read them
     * if an earlier avro use in the JVM (an encoder's Utf8 checks its
     * length too) initialized them first. */
-  private lazy val lengthLimits: Unit = {
+  private[avro] lazy val lengthLimits: Unit = {
     Seq(SystemLimitException.MAX_STRING_LENGTH_PROPERTY,
       SystemLimitException.MAX_BYTES_LENGTH_PROPERTY,
       SystemLimitException.MAX_COLLECTION_LENGTH_PROPERTY)
@@ -122,91 +127,63 @@ object AvroCodec {
       s.getTypes.asScala.find(_.getType != Schema.Type.NULL).getOrElse(s)
     else s
 
-  /** avro-java datum -> Spark Row external value for one field. The
-    * default arm is the historical behavior (Utf8 -> String, ByteBuffer
-    * -> copied Array[Byte]); logical types convert via their annotation.
-    */
-  private def fromAvroConv(s0: Schema): Any => Any = {
+  /** avro-java datum -> Catalyst value for one field: strings as
+    * `UTF8String` straight from the `Utf8` bytes, timestamps as micros,
+    * dates as days, decimals as `Decimal`, containers as `ArrayData`,
+    * `MapData` and `InternalRow`. Every value is a copy: the resolving
+    * reader reuses the record, its containers and its buffers from one
+    * frame to the next. */
+  private[avro] def catalystConv(s0: Schema): AnyRef => Any = {
     val s = unwrapUnion(s0)
-    s.getLogicalType match {
-      case d: org.apache.avro.LogicalTypes.Decimal =>
-        val scale = d.getScale;
-        {
-          case null => null
-          case bb: java.nio.ByteBuffer =>
-            val arr = new Array[Byte](bb.remaining())
-            bb.duplicate().get(arr)
-            new java.math.BigDecimal(new java.math.BigInteger(arr), scale)
-          case fx: org.apache.avro.generic.GenericFixed =>
-            new java.math.BigDecimal(new java.math.BigInteger(fx.bytes()), scale)
-          case v => v
+    def bytes(bb: java.nio.ByteBuffer): Array[Byte] = {
+      val arr = new Array[Byte](bb.remaining())
+      bb.duplicate().get(arr)
+      arr
+    }
+    val conv: AnyRef => Any = s.getLogicalType match {
+      case d: LogicalTypes.Decimal =>
+        v => {
+          val unscaled = v match { case bb: java.nio.ByteBuffer => bytes(bb); case fx: GenericFixed => fx.bytes() }
+          Decimal(new java.math.BigDecimal(new java.math.BigInteger(unscaled), d.getScale),
+            d.getPrecision, d.getScale)
         }
-      case _: org.apache.avro.LogicalTypes.TimestampMicros => {
-        case null => null
-        case us: java.lang.Long =>
-          val ts = new java.sql.Timestamp(Math.floorDiv(us.longValue(), 1000000L) * 1000L)
-          ts.setNanos((Math.floorMod(us.longValue(), 1000000L) * 1000L).toInt)
-          ts
-        case v => v
-      }
-      case _: org.apache.avro.LogicalTypes.TimestampMillis => {
-        case null => null
-        case ms: java.lang.Long => new java.sql.Timestamp(ms.longValue())
-        case v => v
-      }
-      case _: org.apache.avro.LogicalTypes.Date => {
-        case null => null
-        case days: java.lang.Integer =>
-          java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(days.longValue()))
-        case v => v
-      }
+      // the micros a `java.sql.Timestamp` of the same instant encodes to,
+      // as `encode`'s inverse: Spark rebases a Timestamp before 1582 from
+      // the hybrid Julian calendar
+      case _: LogicalTypes.TimestampMicros =>
+        us => RebaseDateTime.rebaseJulianToGregorianMicros(us.asInstanceOf[java.lang.Long].longValue())
+      case _: LogicalTypes.TimestampMillis =>
+        ms => RebaseDateTime.rebaseJulianToGregorianMicros(
+          Math.multiplyExact(ms.asInstanceOf[java.lang.Long].longValue(), 1000L))
       case _ => s.getType match {
-        // complex types build fresh Scala collections per row — the
-        // avro record and every container inside it are REUSED across
-        // rows by the resolving reader, so sharing structure would
-        // corrupt earlier rows
         case Schema.Type.ARRAY =>
-          val elemConv = fromAvroConv(s.getElementType);
-          {
-            case null => null
-            case c: java.util.Collection[_] => c.asScala.iterator.map(elemConv).toSeq
-            case v => v
-          }
+          val elem = catalystConv(s.getElementType)
+          v => new GenericArrayData(
+            v.asInstanceOf[java.util.Collection[AnyRef]].iterator().asScala.map(elem).toArray)
         case Schema.Type.MAP =>
-          val valConv = fromAvroConv(s.getValueType);
-          {
-            case null => null
-            case m: java.util.Map[_, _] =>
-              m.asScala.iterator.map { case (k, v) => (k.toString, valConv(v)) }.toMap
-            case v => v
-          }
+          val value = catalystConv(s.getValueType)
+          v => ArrayBasedMapData(v.asInstanceOf[java.util.Map[AnyRef, AnyRef]],
+            k => string(k.asInstanceOf[AnyRef]), x => value(x.asInstanceOf[AnyRef]))
         case Schema.Type.RECORD =>
-          val convs = s.getFields.asScala.map(f => fromAvroConv(f.schema())).toArray;
-          {
-            case null => null
-            case r: GenericRecord =>
-              Row.fromSeq((0 until convs.length).map(i => convs(i)(r.get(i))))
-            case v => v
-          }
-        case _ => {
-          case u: Utf8 => u.toString
-          case e: org.apache.avro.generic.GenericEnumSymbol[_] => e.toString
-          case fx: org.apache.avro.generic.GenericFixed => fx.bytes().clone()
-          case bb: java.nio.ByteBuffer =>
-            // avro-java returns ByteBuffer for BYTES; Spark needs
-            // Array[Byte] for BinaryType (copy — the record and its
-            // buffers are reused across rows)
-            val arr = new Array[Byte](bb.remaining())
-            bb.duplicate().get(arr)
-            arr
-          case v => v
-        }
+          val convs = s.getFields.asScala.map(f => catalystConv(f.schema())).toArray
+          v => new GenericInternalRow(
+            Array.tabulate[Any](convs.length)(i => convs(i)(v.asInstanceOf[GenericRecord].get(i))))
+        case Schema.Type.STRING | Schema.Type.ENUM => string
+        case Schema.Type.BYTES => v => bytes(v.asInstanceOf[java.nio.ByteBuffer])
+        case Schema.Type.FIXED => v => v.asInstanceOf[GenericFixed].bytes().clone()
+        // int, long, float, double, boolean and date days are Catalyst's own
+        case _ => identity
       }
     }
+    v => if (v == null) null else conv(v)
   }
 
-  private def fromAvroConvs(schema: Schema): Array[Any => Any] =
-    schema.getFields.asScala.map(f => fromAvroConv(f.schema())).toArray
+  /** A string, enum symbol or map key as a `UTF8String` that owns its
+    * bytes. */
+  private def string(v: AnyRef): UTF8String = v match {
+    case u: Utf8 => UTF8String.fromBytes(java.util.Arrays.copyOf(u.getBytes, u.getByteLength))
+    case other => UTF8String.fromString(other.toString)
+  }
 
   /** Spark Row external value -> avro-java datum for one field. A
     * decimal that needs rounding to reach the schema scale throws
@@ -353,14 +330,12 @@ object AvroCodec {
     * this path never emits `unknown_schema_id`.
     */
   def decode(df: DataFrame, valueCol: String, schemaJson: String,
-             passthrough: Seq[String] = Nil): DataFrame = {
-    val writer = Some(schemaJson)
-    decodeFrames(df, valueCol, _ => writer, schemaJson, passthrough)
-  }
+             passthrough: Seq[String] = Nil): DataFrame =
+    decodeFrames(df, valueCol, None, schemaJson, passthrough)
 
   /** Schema-evolution decode: each CP1 frame's id selects its WRITER
     * schema from `writerSchemas` (a registry snapshot — driver-fetched,
-    * shipped with the closure, never a per-record network call), and all
+    * shipped with the plan, never a per-record network call), and all
     * records are resolved to the single `readerSchemaJson` via standard
     * Avro schema resolution: reader-added fields fill from defaults,
     * reader-dropped fields are skipped. Output schema is the READER's.
@@ -371,61 +346,19 @@ object AvroCodec {
   def decodeMulti(df: DataFrame, valueCol: String,
                   writerSchemas: Map[Int, String], readerSchemaJson: String,
                   passthrough: Seq[String] = Nil): DataFrame =
-    decodeFrames(df, valueCol, writerSchemas.get, readerSchemaJson, passthrough)
+    decodeFrames(df, valueCol, Some(writerSchemas), readerSchemaJson, passthrough)
 
-  /** The one per-partition decode kernel behind [[decode]],
-    * [[decodeMulti]] and [[decodeToJson]]: `writerFor` maps a frame's
-    * schema id to its writer schema JSON (None = `unknown_schema_id`). */
+  /** The passthrough columns, then one [[DecodeFrames]] generator over
+    * `valueCol`: the plan's one decode operator, for [[decode]],
+    * [[decodeMulti]] and [[decodeToJson]], batch and streaming alike. */
   private def decodeFrames(df: DataFrame, valueCol: String,
-                           writerFor: Int => Option[String], readerSchemaJson: String,
+                           writerSchemas: Option[Map[Int, String]], readerSchemaJson: String,
                            passthrough: Seq[String]): DataFrame = {
-    val structType = toStructType(readerSchemaJson)
-    val inSchema = df.schema
-    val valIdx = inSchema.fieldIndex(valueCol)
-    val passIdx = passthrough.map(inSchema.fieldIndex)
-    val outSchema = StructType(
-      passthrough.map(inSchema(_)) ++
-        structType.fields.map(_.copy(nullable = true)) :+
-        StructField("err", StringType, nullable = true))
-    val nFields = structType.fields.length
-    df.mapPartitions { iter =>
-      lengthLimits
-      val readerSchema = new Schema.Parser().parse(readerSchemaJson)
-      val convs = fromAvroConvs(readerSchema)
-      // one resolving reader per distinct writer schema, built lazily
-      // per partition
-      val readers = scala.collection.mutable.Map.empty[String, GenericDatumReader[GenericRecord]]
-      var decoder: BinaryDecoder = null
-      var rec: GenericRecord = null
-      iter.map { row =>
-        val pass = passIdx.map(row.get)
-        val bytes = row.getAs[Array[Byte]](valIdx)
-        ConfluentFraming.unframe(bytes) match {
-          case ConfluentFraming.Framed(id, b, off, len) =>
-            writerFor(id) match {
-              case None =>
-                Row.fromSeq(pass ++ Seq.fill[Any](nFields)(null) :+ s"unknown_schema_id:$id")
-              case Some(writerJson) =>
-                try {
-                  val reader = readers.getOrElseUpdate(writerJson,
-                    new GenericDatumReader[GenericRecord](
-                      new Schema.Parser().parse(writerJson), readerSchema))
-                  decoder = DecoderFactory.get().binaryDecoder(b, off, len, decoder)
-                  rec = reader.read(rec, decoder)
-                  val vals = (0 until nFields).map(i => convs(i)(rec.get(i)))
-                  Row.fromSeq(pass ++ vals :+ null)
-                } catch {
-                  case e: Exception =>
-                    Row.fromSeq(pass ++ Seq.fill[Any](nFields)(null) :+ s"decode_error:${e.getClass.getSimpleName}")
-                }
-            }
-          case ConfluentFraming.BadMagic =>
-            Row.fromSeq(pass ++ Seq.fill[Any](nFields)(null) :+ "bad_magic")
-          case ConfluentFraming.Truncated =>
-            Row.fromSeq(pass ++ Seq.fill[Any](nFields)(null) :+ "truncated")
-        }
-      }
-    }(Encoders.row(outSchema))
+    val output = df.queryExecution.analyzed.output
+    def column(name: String) = GraftSqlBridge.column(output(df.schema.fieldIndex(name)))
+    val decoded = DecodeFrames(
+      GraftSqlBridge.expression(column(valueCol)), readerSchemaJson, writerSchemas)
+    df.select(passthrough.map(column) :+ GraftSqlBridge.column(decoded): _*)
   }
 
   /** The field types [[decodeToJson]] writes. */
@@ -476,4 +409,70 @@ object AvroCodec {
       .withColumn("json",
         when(octet_length(json) =!= length(json), escapeSurrogates(json)).otherwise(json))
   }
+}
+
+/** The decode kernel as a Catalyst generator: one output row per frame,
+  * evaluated once per input row by `GenerateExec` on batch and streaming
+  * plans alike, with no planner strategy or session extension. Each
+  * task's copy reads with one resolving reader per distinct writer schema
+  * (built on first use) and reuses its decoder and record across rows.
+  * `writerSchemas` None reads every id with the reader schema. */
+private[avro] final case class DecodeFrames(child: Expression, readerSchemaJson: String,
+                                            writerSchemas: Option[Map[Int, String]])
+    extends UnaryExpression with Generator with CodegenFallback with ExpectsInputTypes {
+
+  /** The reader schema's fields, all nullable, then `err`. */
+  override lazy val elementSchema: StructType =
+    StructType(AvroCodec.toStructType(readerSchemaJson).fields.map(_.copy(nullable = true)) :+
+      StructField("err", StringType, nullable = true))
+  override def inputTypes = Seq(BinaryType)
+  override def prettyName: String = "decode_frames"
+  // each task's copy keeps its readers, decoder and record across rows
+  override def stateful: Boolean = true
+
+  @transient private lazy val readerSchema = {
+    AvroCodec.lengthLimits
+    new Schema.Parser().parse(readerSchemaJson)
+  }
+  @transient private lazy val convs =
+    readerSchema.getFields.asScala.map(f => AvroCodec.catalystConv(f.schema())).toArray
+  @transient private lazy val readers =
+    scala.collection.mutable.Map.empty[String, GenericDatumReader[GenericRecord]]
+  @transient private var decoder: BinaryDecoder = _
+  @transient private var rec: GenericRecord = _
+
+  /** The frame's row: its fields and a null `err`, or null fields and the
+    * failure's class. The row owns every value in it. */
+  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
+    val values = new Array[Any](convs.length + 1)
+    val err = ConfluentFraming.unframe(child.eval(input).asInstanceOf[Array[Byte]]) match {
+      case ConfluentFraming.Framed(id, b, off, len) =>
+        writerSchemas.fold(Option(readerSchemaJson))(_.get(id)) match {
+          case None => s"unknown_schema_id:$id"
+          case Some(writerJson) =>
+            try {
+              val reader = readers.getOrElseUpdate(writerJson,
+                new GenericDatumReader[GenericRecord](new Schema.Parser().parse(writerJson), readerSchema))
+              decoder = DecoderFactory.get().binaryDecoder(b, off, len, decoder)
+              rec = reader.read(rec, decoder)
+              var i = 0
+              while (i < convs.length) { values(i) = convs(i)(rec.get(i)); i += 1 }
+              null
+            } catch {
+              case e: Exception => s"decode_error:${e.getClass.getSimpleName}"
+            }
+        }
+      case ConfluentFraming.BadMagic => "bad_magic"
+      case ConfluentFraming.Truncated => "truncated"
+    }
+    if (err == null) Iterator.single(new GenericInternalRow(values))
+    else {
+      val failed = new Array[Any](convs.length + 1)
+      failed(convs.length) = UTF8String.fromString(err)
+      Iterator.single(new GenericInternalRow(failed))
+    }
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): DecodeFrames =
+    copy(child = newChild)
 }

@@ -46,6 +46,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * The job's Hadoop conf reaches the tasks as one broadcast rather than
   * a copy in every task closure.
   *
+  * Batch files are staging files, written without dictionary encoding:
+  * [[compact]] reads each of them once, and its Spark writer builds the
+  * base generation's dictionaries anyway. A dictionary would cost the
+  * trigger path CPU for nothing: `ts_us` is unique per record, so
+  * parquet drops its dictionary at the first page, and the string
+  * columns' dictionaries are rebuilt by the fold.
+  *
   * One-directory-per-batch accumulates a small-files problem
   * unboundedly, so [[compact]] periodically folds applied batches into
   * a generational base table:
@@ -254,22 +261,25 @@ object ParquetGraphSink {
   import org.apache.hadoop.fs.{Path, PathFilter}
   import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskID, TaskType}
   import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+  import org.apache.parquet.hadoop.ParquetOutputFormat
   import org.apache.spark.TaskContext
   import org.apache.spark.sql.catalyst.InternalRow
   import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
   import org.apache.spark.util.SerializableConfiguration
 
   /** Write `df` into `dir` as one parquet file per non-empty partition
-    * (partition 0 always writes one), in one job, with no output
-    * committer: each task attempt writes `part-<partition>-<attempt>`
-    * in place, `<attempt>` being the attempt's context-wide id, so a
-    * retry never meets its predecessor's file. Returns the names of the
-    * files the successful attempts wrote, the only ones a reader may
-    * trust. */
+    * (partition 0 always writes one), without dictionary encoding, in
+    * one job, with no output committer: each task attempt writes
+    * `part-<partition>-<attempt>` in place, `<attempt>` being the
+    * attempt's context-wide id, so a retry never meets its predecessor's
+    * file. Returns the names of the files the successful attempts wrote,
+    * the only ones a reader may trust. */
   private def writeParts(df: DataFrame, dir: String): Seq[String] = {
     val spark = df.sparkSession
     val schema = df.schema
     val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    // staging files: compact() reads each once and rebuilds dictionaries
+    job.getConfiguration.setBoolean(ParquetOutputFormat.ENABLE_DICTIONARY, false)
     val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
     val conf = spark.sparkContext.broadcast(new SerializableConfiguration(job.getConfiguration))
     val rows = df.queryExecution.toRdd

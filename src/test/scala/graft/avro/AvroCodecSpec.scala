@@ -316,4 +316,68 @@ class AvroCodecSpec extends AnyFunSuite with SparkFixture {
     }
     assert(thrown.getMessage != null)
   }
+
+  test("decoded rows own their values: one partition, reused reader buffers, a decode_error between") {
+    // the reader reuses its record, arrays, nested records and bytes
+    // buffers (and, with avro's non-fast reader, its Utf8s) from frame to
+    // frame; the longest values come first, so a later, shorter record
+    // overwrites buffers an earlier row would still point at
+    val schemaJson =
+      """{"type":"record","name":"rb","fields":[
+        |{"name":"id","type":"long"},
+        |{"name":"s","type":"string"},
+        |{"name":"arr","type":{"type":"array","items":"string"}},
+        |{"name":"m","type":{"type":"map","values":"string"}},
+        |{"name":"rec","type":{"type":"record","name":"In","fields":[
+        |  {"name":"name","type":"string"},
+        |  {"name":"tags","type":{"type":"array","items":"string"}}]}},
+        |{"name":"b","type":"bytes"}]}""".stripMargin
+    val rows = Seq(
+      Row(1L, "x" * 40 + "\u00e9\u4e2d", Seq("alpha-long-string", "beta", "gamma"),
+        Map("k1" -> "v-long-value", "k2" -> "v2", "k3" -> "v3"),
+        Row("inner-long-name", Seq("t1", "t2", "t3")), Array.tabulate[Byte](10)(_.toByte)),
+      Row(2L, "short", Seq("a"), Map("z" -> "1"), Row("n", Seq("u")), Array[Byte](7, 8)),
+      Row(3L, "", Seq.empty[String], Map.empty[String, String], Row("", Seq.empty[String]),
+        Array.empty[Byte]),
+      Row(4L, "mid-length", Seq("aa", "bb"), Map("k1" -> "x", "k9" -> "y"),
+        Row("mm", Seq("q", "r")), Array[Byte](-1, 0, 1, 2, 3)))
+    val encoded = AvroCodec.encode(spark.createDataFrame(
+        new java.util.ArrayList[Row](rows.asJava), AvroCodec.toStructType(schemaJson)),
+        schemaJson, 5, passthrough = Seq("id"))
+      .collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]](1)).sortBy(_._1).toSeq
+    // a valid header whose body ends mid-record, between records 1 and 2
+    val cut = encoded.head._2.take(encoded.head._2.length / 2)
+    val frames = encoded.head +: (-1L -> cut) +: encoded.tail
+    def key(id: Long, r: Row, at: Int) = (id, r.getString(at), r.getSeq[String](at + 1),
+      r.getMap[String, String](at + 2).toMap,
+      (r.getStruct(at + 3).getString(0), r.getStruct(at + 3).getSeq[String](1)),
+      r.getAs[Array[Byte]](at + 4).toSeq)
+    val want = rows.map(r => key(r.getLong(0), r, 1))
+
+    import spark.implicits._
+    val out = AvroCodec.decode(frames.toDF("row_id", "value").coalesce(1), "value", schemaJson,
+      passthrough = Seq("row_id")).collect()
+    assert(out.length == frames.length)
+    val bad = out.filter(_.getLong(0) == -1L).head
+    assert(bad.getAs[String]("err").startsWith("decode_error:"))
+    assert((1 until 7).forall(bad.isNullAt), "a failed frame's fields must be null")
+    val good = out.filter(_.getLong(0) >= 0L).sortBy(_.getLong(0))
+    assert(good.forall(_.getAs[String]("err") == null))
+    assert(good.map(r => key(r.getLong(1), r, 2)).toSeq == want)
+
+    // the kernel itself, every row held until the last frame is read: a
+    // row that views the reader's buffers instead of copying them reads
+    // the later frames' bytes here
+    val kernel = DecodeFrames(org.apache.spark.sql.catalyst.expressions.BoundReference(
+      0, BinaryType, nullable = true), schemaJson, None)
+    val held = frames.map { case (_, f) =>
+      kernel.eval(org.apache.spark.sql.catalyst.InternalRow(f)).iterator.next()
+    }
+    val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToScalaConverter(kernel.elementSchema)
+    val external = held.map(toRow(_).asInstanceOf[Row])
+    assert(external(1).getString(6).startsWith("decode_error:") &&
+      (0 until 6).forall(external(1).isNullAt))
+    assert(external.patch(1, Nil, 1).map(r => key(r.getLong(0), r, 1)) == want)
+  }
 }

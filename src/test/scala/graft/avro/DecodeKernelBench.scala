@@ -23,7 +23,12 @@ import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
   *    record as avro's JSON costs.
   *
   * Each number is the median of `passes` timed passes after `warmup`
-  * untimed ones, with the spread (min-max) beside it.
+  * untimed ones, with the spread (min-max) beside it. The engine passes
+  * are interleaved (scan, decode_multi, decode_to_json, scan, ...), so
+  * a slow stretch of a shared host lands on all three alike;
+  * `decode_multi_pair_diff` is the median and quartiles of the per-pass
+  * difference `decode_multi − scan`, beside `decode_multi_net`, the
+  * difference of the two medians.
   *
   * Not a spec, so the test suite does not run it. Run it after
   * `sbt Test/compile` with the `java` line of `tools/run.sh`, adding
@@ -70,12 +75,12 @@ object DecodeKernelBench {
         StructType(Seq(StructField("value", BinaryType)))).cache()
       require(framed.count() == records)
       val decoded = AvroCodec.decodeMulti(framed, "value", Map(1 -> schemaJson), schemaJson)
+      val json = AvroCodec.decodeToJson(framed, "value", schemaJson)
       def noop(df: org.apache.spark.sql.DataFrame): Unit =
         df.write.format("noop").mode("overwrite").save()
-      val scanUs = timed(warmup, passes, records)(noop(framed))
-      val decodeUs = timed(warmup, passes, records)(noop(decoded))
-      val jsonUs = timed(warmup, passes, records)(
-        noop(AvroCodec.decodeToJson(framed, "value", schemaJson)))
+      val Seq(scanUs, decodeUs, jsonUs) =
+        interleaved(warmup, passes, records)(Seq(framed, decoded, json).map(df => () => noop(df)))
+      val netUs = decodeUs.zip(scanUs).map { case (d, s) => d - s }
 
       println(f"decode kernel: $records SPO frames, $passes timed passes after $warmup " +
         f"(checksum $sink)")
@@ -85,6 +90,8 @@ object DecodeKernelBench {
           f"(min ${us.min}%.3f, max ${us.max}%.3f)")
       }
       println(f"decode_multi_net_us_per_rec ${median(decodeUs) - median(scanUs)}%.3f")
+      println(f"decode_multi_pair_diff_us_per_rec ${median(netUs)}%.3f " +
+        f"(q1 ${quantile(netUs, 0.25)}%.3f, q3 ${quantile(netUs, 0.75)}%.3f)")
       println(f"json_step_us_per_rec ${median(jsonUs) - median(decodeUs)}%.3f")
     } finally spark.stop()
   }
@@ -106,14 +113,26 @@ object DecodeKernelBench {
   }
 
   /** µs per record of each timed pass. */
-  private def timed(warmup: Int, passes: Int, records: Int)(body: => Unit): Seq[Double] = {
-    (0 until warmup).foreach(_ => body)
+  private def timed(warmup: Int, passes: Int, records: Int)(body: => Unit): Seq[Double] =
+    interleaved(warmup, passes, records)(Seq(() => body)).head
+
+  /** µs per record of each timed pass of each body, the bodies run in
+    * turn within every pass. */
+  private def interleaved(warmup: Int, passes: Int, records: Int)(
+      bodies: Seq[() => Unit]): Seq[Seq[Double]] = {
+    (0 until warmup).foreach(_ => bodies.foreach(_()))
     (0 until passes).map { _ =>
-      val t0 = System.nanoTime()
-      body
-      (System.nanoTime() - t0) / 1e3 / records
-    }
+      bodies.map { body =>
+        val t0 = System.nanoTime()
+        body()
+        (System.nanoTime() - t0) / 1e3 / records
+      }
+    }.transpose
   }
 
-  private def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
+  private def median(xs: Seq[Double]): Double = quantile(xs, 0.5)
+
+  /** The nearest-rank quantile. */
+  private def quantile(xs: Seq[Double], q: Double): Double =
+    xs.sorted.apply(((xs.size - 1) * q).round.toInt)
 }

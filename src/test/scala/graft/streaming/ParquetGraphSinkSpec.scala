@@ -142,6 +142,54 @@ class ParquetGraphSinkSpec extends AnyFunSuite with SparkFixture {
     }
   }
 
+  test("batch files are written without dictionaries; the compacted base keeps them") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    val tablePath = java.nio.file.Files.createTempDirectory("graft_sink_d").toString
+    // (column path, dictionary-encoded) of every column chunk of every
+    // parquet file directly in `dir`
+    def chunks(dir: String): Seq[(String, Boolean)] = {
+      val files = new java.io.File(dir).listFiles().toSeq
+        .filter(f => f.getName.endsWith(".parquet"))
+      assert(files.nonEmpty, s"no parquet files in $dir")
+      files.flatMap { f =>
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f.toURI), new org.apache.hadoop.conf.Configuration()))
+        try reader.getFooter.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala.map(c =>
+          c.getPath.toDotString -> c.getEncodings.asScala.exists(_.usesDictionary)))
+        finally reader.close()
+      }
+    }
+    def triples(ids: Range) =
+      ids.map(i => (s"s${i % 11}", "knows", s"o${i % 7}", i.toLong))
+        .toDF("subject", "predicate", "object", "ts_us").repartition(2)
+    def graphOf(sink: ParquetGraphSink) = {
+      val (objs, edges) = sink.graph(spark)
+      (objs.collect().toSet, edges.collect().toSet)
+    }
+    try {
+      val sink = new ParquetGraphSink(tablePath)
+      sink.merge(triples(0 until 300), 0L)
+      sink.merge(triples(300 until 600), 1L)
+      Seq(0L, 1L).foreach { id =>
+        val batch = chunks(s"$tablePath/triples/batch_id=$id")
+        assert(batch.map(_._1).toSet == Set("subject", "predicate", "object", "ts_us"))
+        assert(!batch.exists(_._2), s"batch $id has dictionary-encoded chunks: $batch")
+      }
+      val merged = graphOf(sink)
+      sink.compact(spark)
+      assert(graphOf(sink) == merged, "compaction changed the graph")
+      val base = chunks(s"$tablePath/base/gen=1")
+      Seq("subject", "predicate", "object").foreach { c =>
+        assert(base.filter(_._1 == c).forall(_._2) && base.exists(_._1 == c),
+          s"base column $c is not dictionary-encoded: $base")
+      }
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tablePath))
+    }
+  }
+
   test("the marker is the only commit: it lists exactly the written files, " +
     "readers trust nothing else, and empty batches stay readable") {
     import spark.implicits._
