@@ -416,15 +416,13 @@ object AvroCodec {
   * plans alike, with no planner strategy or session extension. Each
   * task's copy reads with one resolving reader per distinct writer schema
   * (built on first use) and reuses its decoder and record across rows.
-  * `writerSchemas` None reads every id with the reader schema. */
+  * `writerSchemas` None reads every id with the reader schema. Every
+  * Catalyst copy shares the `elementSchema` its companion parsed once. */
 private[avro] final case class DecodeFrames(child: Expression, readerSchemaJson: String,
-                                            writerSchemas: Option[Map[Int, String]])
+                                            writerSchemas: Option[Map[Int, String]],
+                                            override val elementSchema: StructType)
     extends UnaryExpression with Generator with CodegenFallback with ExpectsInputTypes {
 
-  /** The reader schema's fields, all nullable, then `err`. */
-  override lazy val elementSchema: StructType =
-    StructType(AvroCodec.toStructType(readerSchemaJson).fields.map(_.copy(nullable = true)) :+
-      StructField("err", StringType, nullable = true))
   override def inputTypes = Seq(BinaryType)
   override def prettyName: String = "decode_frames"
   // each task's copy keeps its readers, decoder and record across rows
@@ -475,4 +473,11 @@ private[avro] final case class DecodeFrames(child: Expression, readerSchemaJson:
 
   override protected def withNewChildInternal(newChild: Expression): DecodeFrames =
     copy(child = newChild)
+}
+
+private[avro] object DecodeFrames {
+  /** Output: the reader schema's fields, all nullable, then `err`. */
+  def apply(child: Expression, json: String, writerSchemas: Option[Map[Int, String]]): DecodeFrames =
+    DecodeFrames(child, json, writerSchemas, StructType(AvroCodec.toStructType(json).fields
+      .map(_.copy(nullable = true)) :+ StructField("err", StringType, nullable = true)))
 }

@@ -23,9 +23,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * `spark.hadoop.*` settings and runtime `hadoopConfiguration` edits
   * apply); a bare `new Configuration()` fallback keeps the helpers
   * usable before any session exists (shutdown hooks, tests tearing
-  * down). These are metadata operations — a listing, a marker create,
-  * a recursive delete, each at most once per build/append/compact/probe
-  * — so per-call conf resolution is noise, not a hot path.
+  * down). Each call copies that conf to resolve its filesystem: noise
+  * once per build/append/compact/probe, but a stream's trigger makes
+  * several calls, so [[list]] and [[createMarker]] also take, and
+  * [[rename]] takes, a filesystem resolved once (`ParquetGraphSink.merge`).
   */
 private[graft] object IndexFs {
 
@@ -43,8 +44,9 @@ private[graft] object IndexFs {
   }
 
   /** Child statuses of `dir`, empty when it does not exist. */
-  def list(dir: String): Array[org.apache.hadoop.fs.FileStatus] = {
-    val (fs, p) = resolve(dir)
+  def list(dir: String): Array[org.apache.hadoop.fs.FileStatus] = list(resolve(dir)._1, dir)
+  def list(fs: FileSystem, dir: String): Array[org.apache.hadoop.fs.FileStatus] = {
+    val p = new Path(dir)
     if (!fs.exists(p)) Array.empty else fs.listStatus(p)
   }
 
@@ -76,21 +78,21 @@ private[graft] object IndexFs {
     * [[rename]] it into place. `overwrite = false` keeps replays loud
     * where the caller wants them. */
   def createMarker(file: String, content: String = "",
-                   overwrite: Boolean = true): Unit = {
-    val (fs, p) = resolve(file)
-    val out = fs.create(p, overwrite)
+                   overwrite: Boolean = true): Unit =
+    createMarker(resolve(file)._1, file, content, overwrite)
+  def createMarker(fs: FileSystem, file: String, content: String, overwrite: Boolean): Unit = {
+    val out = fs.create(new Path(file), overwrite)
     try { if (content.nonEmpty) out.write(content.getBytes("UTF-8")) }
     finally out.close()
   }
 
-  /** Move `from` to the absent path `to` (parents created as needed),
+  /** Move `from` to the absent path `to` on `fs` (parents created as needed),
     * loud when the store refuses. Atomic on HDFS and local disk, so a
     * file staged whole and renamed into place is never seen partial. */
-  def rename(from: String, to: String): Unit = {
-    val (fs, src) = resolve(from)
+  def rename(fs: FileSystem, from: String, to: String): Unit = {
     val dst = new Path(to)
     fs.mkdirs(dst.getParent)
-    if (!fs.rename(src, dst))
+    if (!fs.rename(new Path(from), dst))
       throw new java.io.IOException(s"IndexFs.rename: could not move $from to $to")
   }
 

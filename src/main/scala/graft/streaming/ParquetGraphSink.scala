@@ -1,7 +1,18 @@
 package graft.streaming
 
 import graft.operators.IndexFs
+import org.apache.hadoop.conf.{Configurable, Configuration}
+import org.apache.hadoop.fs.{FileSystem, Path, PathFilter}
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.parquet.hadoop.ParquetOutputFormat
+import org.apache.spark.{SparkContext, TaskContext}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.util.SerializableConfiguration
+import scala.jdk.CollectionConverters._
 
 /** The reference's persistence stage as a streaming graph sink: a
   * `foreachBatch` body persisting each micro-batch of decoded SPO
@@ -43,8 +54,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * task-commit renames and job commit would be a second commit behind
   * the marker, and on a small micro-batch they are most of the write
   * (the commit-by-manifest discipline of Spark's own FileStreamSink).
-  * The job's Hadoop conf reaches the tasks as one broadcast rather than
-  * a copy in every task closure.
+  * The job runs on the batch's own rows (the micro-batch's RDD, planned
+  * once by `foreachBatch`), and its Hadoop conf reaches the tasks as a
+  * broadcast the sink reuses while the conf is unchanged, key by key.
   *
   * Batch files are staging files, written without dictionary encoding:
   * [[compact]] reads each of them once, and its Spark writer builds the
@@ -102,8 +114,8 @@ final class ParquetGraphSink(tablePath: String) extends Serializable {
 
   /** (generation, highest folded batch id); (0, -1) before any
     * compaction. Max-gen marker wins — the Generations read rule. */
-  private def commitState: (Long, Long) = {
-    val records = IndexFs.list(compactionDir)
+  private def commitState(fs: FileSystem = IndexFs.resolve(tablePath)._1): (Long, Long) = {
+    val records = IndexFs.list(fs, compactionDir)
       .map(_.getPath.getName)
       .filter(_.startsWith("commit.gen="))
       .map { n =>
@@ -113,20 +125,91 @@ final class ParquetGraphSink(tablePath: String) extends Serializable {
     if (records.isEmpty) (0L, -1L) else records.maxBy(_._1)
   }
 
+  /** The context, conf and broadcast of the last write's conf, for the
+    * next merge: merge's single writer is its only user. */
+  @transient private[streaming] var shipped:
+    (SparkContext, Configuration, Broadcast[SerializableConfiguration]) = _
+
+  /** The held broadcast while its conf has `conf`'s keys and raw values
+    * (all a task reads of it) in the same context, else a new one. */
+  private def shipConf(sc: SparkContext, conf: Configuration) = {
+    val held = Option(shipped).filter(_._1 eq sc)
+    if (!held.exists(h => h._2.size == conf.size &&
+        h._2.asScala.forall(e => e.getValue == conf.getRaw(e.getKey)))) {
+      held.foreach(_._3.destroy())
+      shipped = (sc, conf, sc.broadcast(new SerializableConfiguration(conf)))
+    }
+    shipped._3
+  }
+
   /** foreachBatch body. Safe under replays and restarts (see class doc). */
   def merge(batch: DataFrame, batchId: Long): Unit = {
+    val fs = IndexFs.resolve(tablePath)._1
     val marker = s"$appliedDir/$batchId"
     // a batch already folded into the base has no marker anymore — the
     // commit record refuses its replay instead
-    if (batchId > commitState._2 && !IndexFs.exists(marker)) {
+    if (batchId > commitState(fs)._2 && !fs.exists(new Path(marker))) {
       val dir = batchDir(batchId)
-      IndexFs.delete(dir)
-      val files = ParquetGraphSink.writeParts(
-        batch.select("subject", "predicate", "object", "ts_us"), dir)
+      fs.delete(new Path(dir), true)
+      val files = writeParts(batch, dir)
       val staged = s"$dir/_marker"
-      IndexFs.createMarker(staged, files.mkString("\n"))
-      IndexFs.rename(staged, marker)
+      IndexFs.createMarker(fs, staged, files.mkString("\n"), overwrite = true)
+      IndexFs.rename(fs, staged, marker)
     }
+  }
+
+  /** Write the batch's subject, predicate, object and ts_us (resolved as
+    * a `select` would) into `dir`, one parquet file per non-empty partition
+    * (partition 0 always writes one), in one job, with no committer: each
+    * task attempt writes `part-<partition>-<attempt>` in place, so a retry
+    * never meets its predecessor's file. Returns the files the successful
+    * attempts wrote, the only ones a reader may trust. */
+  private def writeParts(batch: DataFrame, dir: String): Seq[String] = {
+    val spark = batch.sparkSession
+    val sc = spark.sparkContext
+    val fields = batch.schema.fields
+    val resolver = spark.sessionState.conf.resolver
+    val ordinals = Vector("subject", "predicate", "object", "ts_us").map { c =>
+      val found = fields.indices.filter(i => resolver(fields(i).name, c))
+      require(found.size == 1, s"ParquetGraphSink.merge: the batch needs one column " +
+        s"`$c`, and has ${found.size} among ${fields.map(_.name).mkString(", ")}")
+      found.head
+    }
+    val direct = ordinals == fields.indices
+    val schema = org.apache.spark.sql.types.StructType(ordinals.map(fields))
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    // staging files: compact() reads each once and rebuilds dictionaries
+    job.getConfiguration.setBoolean(ParquetOutputFormat.ENABLE_DICTIONARY, false)
+    val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
+    val conf = shipConf(sc, job.getConfiguration)
+    // a foreachBatch batch is a LogicalRDD over the micro-batch's own RDD
+    val rows = batch.queryExecution.analyzed match {
+      case micro: org.apache.spark.sql.execution.LogicalRDD => micro.rdd
+      case _ => batch.queryExecution.toRdd
+    }
+    val rdd = if (rows.getNumPartitions > 0) rows else sc.parallelize(Seq.empty[InternalRow], 1)
+    sc.runJob(rdd,
+      (task: TaskContext, it: Iterator[InternalRow]) =>
+        if (task.partitionId() > 0 && !it.hasNext) None
+        else {
+          val attempt = new TaskAttemptContextImpl(conf.value.value, new TaskAttemptID(
+            new TaskID("graft", task.stageId(), TaskType.MAP, task.partitionId()),
+            task.attemptNumber()))
+          val name = f"part-${task.partitionId()}%05d-${task.taskAttemptId()}" +
+            factory.getFileExtension(attempt)
+          val out = factory.newInstance(s"$dir/$name", schema, attempt)
+          // the writer reads the four columns through a zero-copy view
+          val view = ProjectingInternalRow(schema, ordinals)
+          val write: InternalRow => Unit =
+            if (direct) out.write else r => { view.project(r); out.write(view) }
+          try it.foreach(write)
+          catch { case t: Throwable =>
+            try out.close() catch { case c: Throwable => t.addSuppressed(c) }
+            throw t
+          }
+          out.close()
+          Some(name)
+        }).toSeq.flatten
   }
 
   /** Everything committed, as (subject, predicate, object, ts_us): the
@@ -152,7 +235,7 @@ final class ParquetGraphSink(tablePath: String) extends Serializable {
 
   /** Batch ids durably applied and not yet folded into the base. */
   def appliedBatchIds: Seq[Long] = {
-    val through = commitState._2
+    val through = commitState()._2
     IndexFs.list(appliedDir)
       .map(_.getPath.getName.toLong)
       .filter(_ > through).toSeq.sorted
@@ -163,7 +246,7 @@ final class ParquetGraphSink(tablePath: String) extends Serializable {
     * every step (see class doc). No-op when nothing new is applied
     * (still reaps leftovers of a previously interrupted cleanup). */
   def compact(spark: SparkSession, protect: Set[Long] = Set.empty): Unit = {
-    val (gen, through) = commitState
+    val (gen, through) = commitState()
     cleanup(gen, through, protect)
     val applied = appliedBatchIds
     if (applied.isEmpty) return
@@ -205,7 +288,7 @@ final class ParquetGraphSink(tablePath: String) extends Serializable {
     * snapshot pins retrieval AND graph context at one instant — the
     * knowledge-graph RAG serving cut. */
   def leg(): graft.operators.ServingSnapshot.Leg = {
-    val (gen, _) = commitState
+    val (gen, _) = commitState()
     require(gen > 0, s"ParquetGraphSink.leg: nothing compacted under " +
       s"$tablePath yet — compact() before publishing a snapshot")
     val unfolded = appliedBatchIds
@@ -247,7 +330,7 @@ final class ParquetGraphSink(tablePath: String) extends Serializable {
     * of unfolded batches list, same TripleStore logic as the batch
     * surface. */
   def graph(spark: SparkSession): (DataFrame, DataFrame) = {
-    val (gen, _) = commitState
+    val (gen, _) = commitState()
     val ids = appliedBatchIds
     require(gen > 0 || ids.nonEmpty, s"no applied batches under $tablePath")
     val t = committed(spark, gen, ids)
@@ -257,57 +340,6 @@ final class ParquetGraphSink(tablePath: String) extends Serializable {
 }
 
 object ParquetGraphSink {
-  import org.apache.hadoop.conf.{Configurable, Configuration}
-  import org.apache.hadoop.fs.{Path, PathFilter}
-  import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskID, TaskType}
-  import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-  import org.apache.parquet.hadoop.ParquetOutputFormat
-  import org.apache.spark.TaskContext
-  import org.apache.spark.sql.catalyst.InternalRow
-  import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-  import org.apache.spark.util.SerializableConfiguration
-
-  /** Write `df` into `dir` as one parquet file per non-empty partition
-    * (partition 0 always writes one), without dictionary encoding, in
-    * one job, with no output committer: each task attempt writes
-    * `part-<partition>-<attempt>` in place, `<attempt>` being the
-    * attempt's context-wide id, so a retry never meets its predecessor's
-    * file. Returns the names of the files the successful attempts wrote,
-    * the only ones a reader may trust. */
-  private def writeParts(df: DataFrame, dir: String): Seq[String] = {
-    val spark = df.sparkSession
-    val schema = df.schema
-    val job = Job.getInstance(spark.sessionState.newHadoopConf())
-    // staging files: compact() reads each once and rebuilds dictionaries
-    job.getConfiguration.setBoolean(ParquetOutputFormat.ENABLE_DICTIONARY, false)
-    val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
-    val conf = spark.sparkContext.broadcast(new SerializableConfiguration(job.getConfiguration))
-    val rows = df.queryExecution.toRdd
-    val rdd =
-      if (rows.getNumPartitions > 0) rows
-      else spark.sparkContext.parallelize(Seq.empty[InternalRow], 1)
-    val written = try spark.sparkContext.runJob(rdd,
-      (task: TaskContext, it: Iterator[InternalRow]) =>
-        if (task.partitionId() > 0 && !it.hasNext) None
-        else {
-          val attempt = new TaskAttemptContextImpl(conf.value.value, new TaskAttemptID(
-            new TaskID("graft", task.stageId(), TaskType.MAP, task.partitionId()),
-            task.attemptNumber()))
-          val name = f"part-${task.partitionId()}%05d-${task.taskAttemptId()}" +
-            factory.getFileExtension(attempt)
-          val out = factory.newInstance(s"$dir/$name", schema, attempt)
-          try it.foreach(out.write)
-          catch { case t: Throwable =>
-            try out.close() catch { case c: Throwable => t.addSuppressed(c) }
-            throw t
-          }
-          out.close()
-          Some(name)
-        })
-    finally conf.destroy()
-    written.toSeq.flatten
-  }
-
   /** The read option carrying the committed files, one
     * `batch_id=<id>/<file>` a line; `<file>` = [[AnyFile]] admits the
     * whole dir. */

@@ -33,21 +33,25 @@ class BfsBoundarySpec extends AnyFunSuite with SparkFixture {
 
   test("a graph draining at exactly maxRounds is a complete answer in both tiers") {
     val dir = pathDir(25) // k_25 sits at dist 50 — the boundary
-    for (cap <- Seq(2000000L /* driver tier */, 0L /* distributed tier */)) {
-      val out = GraphQueries.bfs(TripleStore.staged(spark, dir), driverCap = cap)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      assert(out.size == 51, s"cap=$cap: expected all 51 entities")
-      assert(out.values.max == 50L, s"cap=$cap: boundary node missing")
-    }
+    try {
+      for (cap <- Seq(2000000L /* driver tier */, 0L /* distributed tier */)) {
+        val out = GraphQueries.bfs(TripleStore.staged(spark, dir), driverCap = cap)
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+        assert(out.size == 51, s"cap=$cap: expected all 51 entities")
+        assert(out.values.max == 50L, s"cap=$cap: boundary node missing")
+      }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
   test("a genuine hop-51 frontier fails loudly in both tiers") {
     val dir = pathDir(26) // u_25 at dist 51 — beyond the cap
-    for (cap <- Seq(2000000L, 0L)) {
-      val e = intercept[IllegalArgumentException] {
-        GraphQueries.bfs(TripleStore.staged(spark, dir), driverCap = cap).collect()
+    try {
+      for (cap <- Seq(2000000L, 0L)) {
+        val e = intercept[IllegalArgumentException] {
+          GraphQueries.bfs(TripleStore.staged(spark, dir), driverCap = cap).collect()
+        }
+        assert(e.getMessage.contains("did not drain"), s"cap=$cap: ${e.getMessage}")
       }
-      assert(e.getMessage.contains("did not drain"), s"cap=$cap: ${e.getMessage}")
-    }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 }

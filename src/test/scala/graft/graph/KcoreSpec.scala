@@ -54,20 +54,22 @@ class KcoreSpec extends AnyFunSuite with SparkFixture {
 
   test("multi-round cascade peels the path, keeps the dense block; tiers agree") {
     val dir = cascadeDir(8)
-    val expected = brute(dir, 2L)
-    // the path must be gone, the block intact — and non-trivially so
-    assert(expected.nonEmpty && expected.size == 8, s"block: $expected")
-    assert(expected.values.forall(_ >= 2))
-    for (cap <- Seq(2000000L /* driver tier */, 0L /* distributed tier */)) {
-      val got = GraphQueries.kcore(TripleStore.staged(spark, dir), driverCap = cap,
-          kOverride = Some(2L))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      // ids -> names through the engine's own dictionary to compare
-      val dict = TripleStore.staged(spark, dir).dict
-        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-      val byName = got.map { case (id, d) => dict(id) -> d.toInt }
-      assert(byName == expected, s"cap=$cap")
-    }
+    try {
+      val expected = brute(dir, 2L)
+      // the path must be gone, the block intact — and non-trivially so
+      assert(expected.nonEmpty && expected.size == 8, s"block: $expected")
+      assert(expected.values.forall(_ >= 2))
+      for (cap <- Seq(2000000L /* driver tier */, 0L /* distributed tier */)) {
+        val got = GraphQueries.kcore(TripleStore.staged(spark, dir), driverCap = cap,
+            kOverride = Some(2L))
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+        // ids -> names through the engine's own dictionary to compare
+        val dict = TripleStore.staged(spark, dir).dict
+          .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+        val byName = got.map { case (id, d) => dict(id) -> d.toInt }
+        assert(byName == expected, s"cap=$cap")
+      }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
   test("a cascade deeper than the peel bound fails loudly, not silently") {
@@ -77,12 +79,14 @@ class KcoreSpec extends AnyFunSuite with SparkFixture {
     // both tiers: the driver peel and the distributed loop count rounds
     // independently, so the past-bound refusal is pinned on each
     val dir = cascadeDir(40)
-    for (cap <- Seq(2000000L /* driver tier */, 0L /* distributed tier */)) {
-      val e = intercept[IllegalArgumentException] {
-        GraphQueries.kcore(TripleStore.staged(spark, dir), driverCap = cap,
-          kOverride = Some(2L)).collect()
+    try {
+      for (cap <- Seq(2000000L /* driver tier */, 0L /* distributed tier */)) {
+        val e = intercept[IllegalArgumentException] {
+          GraphQueries.kcore(TripleStore.staged(spark, dir), driverCap = cap,
+            kOverride = Some(2L)).collect()
+        }
+        assert(e.getMessage.contains("converge"), s"cap=$cap")
       }
-      assert(e.getMessage.contains("converge"), s"cap=$cap")
-    }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 }

@@ -310,4 +310,147 @@ class ParquetGraphSinkSpec extends AnyFunSuite with SparkFixture {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tablePath))
     }
   }
+
+  test("merge writes the micro-batch's own RDD: one job per batch on the batch's " +
+    "plan, no second plan, and one conf broadcast for the stream") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val tablePath = java.nio.file.Files.createTempDirectory("graft_sink_p").toString
+    val tag = "graft.spec.mergeBatch"
+    // (batch id, the RDD the job runs on, its parents) of each job that
+    // merge runs
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Int, Seq[Int])]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(tag))).foreach { id =>
+          val rdd = e.stageInfos.maxBy(_.stageId).rddInfos.head
+          jobs.add((id.toLong, rdd.id, rdd.parentIds))
+        }
+    }
+    val sink = new ParquetGraphSink(tablePath)
+    val batchRdds = scala.collection.concurrent.TrieMap.empty[Long, Int]
+    val shipped = scala.collection.concurrent.TrieMap.empty[Long, Long]
+    def onBatch(batch: org.apache.spark.sql.DataFrame, id: Long): Unit = {
+      batch.queryExecution.analyzed match {
+        case micro: org.apache.spark.sql.execution.LogicalRDD => batchRdds(id) = micro.rdd.id
+        case other => fail(s"foreachBatch handed over a ${other.nodeName}, not a LogicalRDD")
+      }
+      spark.sparkContext.setLocalProperty(tag, id.toString)
+      try sink.merge(batch, id) finally spark.sparkContext.setLocalProperty(tag, null)
+      shipped(id) = sink.shipped._3.id
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val input = MemoryStream[(Long, String, String, String)]
+      // extra and reordered columns, as decode's output has them
+      val q = input.toDF().toDF("ts_us", "object", "predicate", "subject")
+        .withColumn("err", lit(null).cast("string"))
+        .writeStream.foreachBatch(onBatch _).start()
+      try (0 until 3).foreach { b =>
+        input.addData((0 until 40).map(i => (b * 40L + i, s"o${i % 7}", "knows", s"s$i")))
+        q.processAllAvailable()
+      } finally q.stop()
+      assert(batchRdds.keySet == Set(0L, 1L, 2L))
+      eventually(timeout(30.seconds)) { assert(jobs.size >= 3) }
+      import scala.jdk.CollectionConverters._
+      val byBatch = jobs.asScala.toSeq.groupBy(_._1)
+      batchRdds.foreach { case (id, rdd) =>
+        val js = byBatch.getOrElse(id, Nil)
+        assert(js.size == 1, s"batch $id: ${js.size} jobs, want one")
+        val (_, jobRdd, parents) = js.head
+        assert(jobRdd == rdd || parents == Seq(rdd), s"batch $id: the write job runs on " +
+          s"RDD $jobRdd (parents ${parents.mkString(",")}), not on the micro-batch's RDD " +
+          s"$rdd or a direct child of it")
+      }
+      assert(shipped.values.toSet.size == 1, s"the conf was broadcast per batch: $shipped")
+      val (_, edges) = sink.graph(spark)
+      assert(edges.count() == 40 && edges.collect().map(_.getLong(3)).sum == 120)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tablePath))
+    }
+  }
+
+  test("merge finds the four columns by name: another order and extra columns " +
+    "store the same rows, and a missing column fails by its name") {
+    import spark.implicits._
+    val tablePath = java.nio.file.Files.createTempDirectory("graft_sink_o").toString
+    val rows = (0 until 60).map(i => (s"s${i % 13}", s"p${i % 3}", s"o${i % 7}", i.toLong))
+    val plain = rows.toDF("subject", "predicate", "object", "ts_us")
+    val shuffled = rows.map { case (s, p, o, t) => (Option.empty[String], t, o, s"x$t", p, s) }
+      .toDF("err", "ts_us", "object", "passthrough", "predicate", "subject")
+    def stored(sink: String) = {
+      val df = spark.read.parquet(s"$sink/triples/batch_id=0")
+      (df.columns.toSeq, df.collect().map(_.toSeq).toSeq.sortBy(_(3).asInstanceOf[Long]))
+    }
+    def graphOf(sink: ParquetGraphSink) = {
+      val (objs, edges) = sink.graph(spark)
+      (objs.collect().toSet, edges.collect().toSet)
+    }
+    try {
+      val a = new ParquetGraphSink(s"$tablePath/a")
+      val b = new ParquetGraphSink(s"$tablePath/b")
+      a.merge(plain, 0L)
+      b.merge(shuffled, 0L)
+      assert(stored(s"$tablePath/b") == stored(s"$tablePath/a"))
+      assert(stored(s"$tablePath/b")._1 == Seq("subject", "predicate", "object", "ts_us"))
+      assert(graphOf(b) == graphOf(a))
+
+      val e = intercept[IllegalArgumentException](b.merge(shuffled.drop("ts_us"), 1L))
+      assert(e.getMessage.contains("`ts_us`"), e.getMessage)
+      assert(b.appliedBatchIds == Seq(0L))
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tablePath))
+    }
+  }
+
+  test("the conf broadcast is reused only while the conf is unchanged: a codec " +
+    "set between two merges reaches the very next batch") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    val tablePath = java.nio.file.Files.createTempDirectory("graft_sink_z").toString
+    def triples(ids: Range) =
+      ids.map(i => (s"s${i % 11}", "knows", s"o${i % 7}", i.toLong))
+        .toDF("subject", "predicate", "object", "ts_us").repartition(2)
+    // the codecs of every column chunk of the batch's files
+    def codecs(path: String, id: Long): Set[String] =
+      new java.io.File(s"$path/triples/batch_id=$id").listFiles().toSeq
+        .filter(_.getName.endsWith(".parquet")).flatMap { f =>
+          val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+              new org.apache.hadoop.fs.Path(f.toURI), new org.apache.hadoop.conf.Configuration()))
+          try reader.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec.name))
+          finally reader.close()
+        }.toSet
+    def graphOf(sink: ParquetGraphSink) = {
+      val (objs, edges) = sink.graph(spark)
+      (objs.collect().toSet, edges.collect().toSet)
+    }
+    val key = "spark.sql.parquet.compression.codec"
+    val saved = spark.conf.getOption(key)
+    try {
+      val sink = new ParquetGraphSink(s"$tablePath/s")
+      val reference = new ParquetGraphSink(s"$tablePath/r")
+      Seq(0, 1, 2).foreach(b => reference.merge(triples(b * 100 until b * 100 + 100), b.toLong))
+      sink.merge(triples(0 until 100), 0L)
+      val first = sink.shipped._3
+      sink.merge(triples(100 until 200), 1L)
+      assert(sink.shipped._3 eq first, "an unchanged conf was broadcast again")
+      spark.conf.set(key, "zstd")
+      sink.merge(triples(200 until 300), 2L)
+      assert(!(sink.shipped._3 eq first), "a changed conf reused the old broadcast")
+      assert(codecs(s"$tablePath/s", 1L) == Set("SNAPPY"))
+      assert(codecs(s"$tablePath/s", 2L) == Set("ZSTD"))
+      val expected = graphOf(reference)
+      assert(graphOf(sink) == expected)
+      sink.compact(spark)
+      assert(graphOf(sink) == expected, "compaction changed the graph")
+    } finally {
+      saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tablePath))
+    }
+  }
 }

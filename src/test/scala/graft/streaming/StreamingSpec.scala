@@ -294,58 +294,61 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     // The topic carries TWO writer schema versions live (v2 adds a
     // defaulted nullable 'origin'), decoded against the v2 reader.
     val watch = java.nio.file.Files.createTempDirectory("graft_topic").toString
-    val spoV2 =
-      """{"type":"record","name":"spo_msg","fields":[
-        |{"name":"subject","type":"string"},
-        |{"name":"predicate","type":"string"},
-        |{"name":"object","type":"string"},
-        |{"name":"origin","type":["null","string"],"default":null}]}""".stripMargin
-    val registry = new graft.avro.SchemaRegistry
-    val v1Id = registry.register("spo-value", AvroQueries.SpoSchemaJson)
-    val v2Id = registry.register("spo-value", spoV2)
-    val dir = "/root/testdata/sf0.001"
-    val triples = graft.graph.TripleStore.triplesFromEvents(
-      graft.operators.Tables(spark, dir).events)
-    val (first, second) = {
-      val all = triples.collect()
-      all.splitAt(all.length / 2)
-    }
-    import spark.implicits._
-    def stage(rows: Array[org.apache.spark.sql.Row], writerJson: String, id: Int, part: String): Unit = {
-      val df = rows.toSeq.map(r => (r.getString(0), r.getString(1), r.getString(2), r.getLong(3)))
-        .toDF("subject", "predicate", "object", "ts_us")
-      val withOrigin =
-        if (writerJson == spoV2) df.withColumn("origin", org.apache.spark.sql.functions.lit("replay"))
-        else df
-      AvroCodec.encode(withOrigin, writerJson, id, passthrough = Seq("ts_us"))
-        .select("ts_us", "value")
-        .write.mode("append").parquet(s"$watch/$part")
-    }
-    // batch 1 staged BEFORE the query starts (v1 frames)
-    stage(first, AvroQueries.SpoSchemaJson, v1Id, "f1")
-    val fileSchema = StructType(Seq(
-      StructField("ts_us", LongType), StructField("value", BinaryType)))
-    val stream = spark.readStream.schema(fileSchema)
-      .option("recursiveFileLookup", "true").parquet(watch)
-    val decoded = AvroCodec.decodeMulti(stream, "value", registry.snapshot, spoV2,
-      passthrough = Seq("ts_us"))
-      .filter(org.apache.spark.sql.functions.col("err").isNull)
     // outside the watched dir: the file source lists it recursively
-    val sink = new ParquetGraphSink(
-      java.nio.file.Files.createTempDirectory("graft_topic_graph").toString)
-    val q = decoded.select("subject", "predicate", "object", "ts_us")
-      .writeStream.foreachBatch(sink.merge _).start()
+    val graphDir = java.nio.file.Files.createTempDirectory("graft_topic_graph").toString
     try {
-      q.processAllAvailable()
-      // batch 2 arrives mid-flight with the EVOLVED writer schema
-      stage(second, spoV2, v2Id, "f2")
-      q.processAllAvailable()
-      val (objs, edges) = sink.graph(spark)
-      val batchObjs = graft.SparkEntry.queries("spo_objects")(spark, dir).collect().toSeq
-      val batchEdges = graft.SparkEntry.queries("spo_relationships")(spark, dir).collect().toSeq
-      assert(objs.orderBy("object_id").collect().toSeq == batchObjs)
-      assert(edges.orderBy("source_id", "target_id", "predicate").collect().toSeq == batchEdges)
-    } finally q.stop()
+      val spoV2 =
+        """{"type":"record","name":"spo_msg","fields":[
+          |{"name":"subject","type":"string"},
+          |{"name":"predicate","type":"string"},
+          |{"name":"object","type":"string"},
+          |{"name":"origin","type":["null","string"],"default":null}]}""".stripMargin
+      val registry = new graft.avro.SchemaRegistry
+      val v1Id = registry.register("spo-value", AvroQueries.SpoSchemaJson)
+      val v2Id = registry.register("spo-value", spoV2)
+      val dir = "/root/testdata/sf0.001"
+      val triples = graft.graph.TripleStore.triplesFromEvents(
+        graft.operators.Tables(spark, dir).events)
+      val (first, second) = {
+        val all = triples.collect()
+        all.splitAt(all.length / 2)
+      }
+      import spark.implicits._
+      def stage(rows: Array[org.apache.spark.sql.Row], writerJson: String, id: Int, part: String): Unit = {
+        val df = rows.toSeq.map(r => (r.getString(0), r.getString(1), r.getString(2), r.getLong(3)))
+          .toDF("subject", "predicate", "object", "ts_us")
+        val withOrigin =
+          if (writerJson == spoV2) df.withColumn("origin", org.apache.spark.sql.functions.lit("replay"))
+          else df
+        AvroCodec.encode(withOrigin, writerJson, id, passthrough = Seq("ts_us"))
+          .select("ts_us", "value")
+          .write.mode("append").parquet(s"$watch/$part")
+      }
+      // batch 1 staged BEFORE the query starts (v1 frames)
+      stage(first, AvroQueries.SpoSchemaJson, v1Id, "f1")
+      val fileSchema = StructType(Seq(
+        StructField("ts_us", LongType), StructField("value", BinaryType)))
+      val stream = spark.readStream.schema(fileSchema)
+        .option("recursiveFileLookup", "true").parquet(watch)
+      val decoded = AvroCodec.decodeMulti(stream, "value", registry.snapshot, spoV2,
+        passthrough = Seq("ts_us"))
+        .filter(org.apache.spark.sql.functions.col("err").isNull)
+      val sink = new ParquetGraphSink(graphDir)
+      val q = decoded.select("subject", "predicate", "object", "ts_us")
+        .writeStream.foreachBatch(sink.merge _).start()
+      try {
+        q.processAllAvailable()
+        // batch 2 arrives mid-flight with the EVOLVED writer schema
+        stage(second, spoV2, v2Id, "f2")
+        q.processAllAvailable()
+        val (objs, edges) = sink.graph(spark)
+        val batchObjs = graft.SparkEntry.queries("spo_objects")(spark, dir).collect().toSeq
+        val batchEdges = graft.SparkEntry.queries("spo_relationships")(spark, dir).collect().toSeq
+        assert(objs.orderBy("object_id").collect().toSeq == batchObjs)
+        assert(edges.orderBy("source_id", "target_id", "predicate").collect().toSeq == batchEdges)
+      } finally q.stop()
+    } finally Seq(watch, graphDir).foreach(d =>
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
   }
 
   test("stateful sessionization closes sessions on gap, keeps tail open") {
