@@ -24,9 +24,9 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * apply); a bare `new Configuration()` fallback keeps the helpers
   * usable before any session exists (shutdown hooks, tests tearing
   * down). Each call copies that conf to resolve its filesystem: noise
-  * once per build/append/compact/probe, but a stream's trigger makes
-  * several calls, so [[list]] and [[createMarker]] also take, and
-  * [[rename]] takes, a filesystem resolved once (`ParquetGraphSink.merge`).
+  * once per build/append/compact/probe, but not on a stream's trigger
+  * path, which makes several calls a batch, so `ParquetGraphSink.merge`
+  * resolves its filesystem once and calls it directly.
   */
 private[graft] object IndexFs {
 
@@ -44,9 +44,8 @@ private[graft] object IndexFs {
   }
 
   /** Child statuses of `dir`, empty when it does not exist. */
-  def list(dir: String): Array[org.apache.hadoop.fs.FileStatus] = list(resolve(dir)._1, dir)
-  def list(fs: FileSystem, dir: String): Array[org.apache.hadoop.fs.FileStatus] = {
-    val p = new Path(dir)
+  def list(dir: String): Array[org.apache.hadoop.fs.FileStatus] = {
+    val (fs, p) = resolve(dir)
     if (!fs.exists(p)) Array.empty else fs.listStatus(p)
   }
 
@@ -75,25 +74,14 @@ private[graft] object IndexFs {
     * file. Callers whose readers trust the name alone use this as is;
     * callers whose readers trust the content either end it with a
     * footer the reader checks ([[ServingSnapshot]]) or stage it and
-    * [[rename]] it into place. `overwrite = false` keeps replays loud
-    * where the caller wants them. */
+    * rename it into place (`ParquetGraphSink.merge`). `overwrite =
+    * false` keeps replays loud where the caller wants them. */
   def createMarker(file: String, content: String = "",
-                   overwrite: Boolean = true): Unit =
-    createMarker(resolve(file)._1, file, content, overwrite)
-  def createMarker(fs: FileSystem, file: String, content: String, overwrite: Boolean): Unit = {
-    val out = fs.create(new Path(file), overwrite)
+                   overwrite: Boolean = true): Unit = {
+    val (fs, p) = resolve(file)
+    val out = fs.create(p, overwrite)
     try { if (content.nonEmpty) out.write(content.getBytes("UTF-8")) }
     finally out.close()
-  }
-
-  /** Move `from` to the absent path `to` on `fs` (parents created as needed),
-    * loud when the store refuses. Atomic on HDFS and local disk, so a
-    * file staged whole and renamed into place is never seen partial. */
-  def rename(fs: FileSystem, from: String, to: String): Unit = {
-    val dst = new Path(to)
-    fs.mkdirs(dst.getParent)
-    if (!fs.rename(new Path(from), dst))
-      throw new java.io.IOException(s"IndexFs.rename: could not move $from to $to")
   }
 
   /** Read a small metadata file fully (commit records, manifests). */

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.operators.IndexFs
 import org.apache.hadoop.conf.{Configurable, Configuration}
-import org.apache.hadoop.fs.{FileSystem, Path, PathFilter}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path, PathFilter}
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.hadoop.ParquetOutputFormat
@@ -10,6 +10,7 @@ import org.apache.spark.{SparkContext, TaskContext}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.util.SerializableConfiguration
 import scala.jdk.CollectionConverters._
@@ -55,8 +56,11 @@ import scala.jdk.CollectionConverters._
   * the marker, and on a small micro-batch they are most of the write
   * (the commit-by-manifest discipline of Spark's own FileStreamSink).
   * The job runs on the batch's own rows (the micro-batch's RDD, planned
-  * once by `foreachBatch`), and its Hadoop conf reaches the tasks as a
-  * broadcast the sink reuses while the conf is unchanged, key by key.
+  * once by `foreachBatch`); a batch the caller cached, or any other
+  * DataFrame, is planned once more for just the four columns, so cached
+  * rows are read, not recomputed, and unused columns are pruned. Its
+  * Hadoop conf reaches the tasks as a broadcast the sink reuses while
+  * the conf is unchanged, key by key.
   *
   * Batch files are staging files, written without dictionary encoding:
   * [[compact]] reads each of them once, and its Spark writer builds the
@@ -114,8 +118,9 @@ final class ParquetGraphSink(tablePath: String) extends Serializable {
 
   /** (generation, highest folded batch id); (0, -1) before any
     * compaction. Max-gen marker wins — the Generations read rule. */
-  private def commitState(fs: FileSystem = IndexFs.resolve(tablePath)._1): (Long, Long) = {
-    val records = IndexFs.list(fs, compactionDir)
+  private def commitState(fs: FileSystem): (Long, Long) = {
+    val dir = new Path(compactionDir)
+    val records = (if (fs.exists(dir)) fs.listStatus(dir) else Array.empty[FileStatus])
       .map(_.getPath.getName)
       .filter(_.startsWith("commit.gen="))
       .map { n =>
@@ -124,6 +129,8 @@ final class ParquetGraphSink(tablePath: String) extends Serializable {
       }
     if (records.isEmpty) (0L, -1L) else records.maxBy(_._1)
   }
+
+  private def tableFs = IndexFs.resolve(tablePath)._1
 
   /** The context, conf and broadcast of the last write's conf, for the
     * next merge: merge's single writer is its only user. */
@@ -144,17 +151,21 @@ final class ParquetGraphSink(tablePath: String) extends Serializable {
 
   /** foreachBatch body. Safe under replays and restarts (see class doc). */
   def merge(batch: DataFrame, batchId: Long): Unit = {
-    val fs = IndexFs.resolve(tablePath)._1
-    val marker = s"$appliedDir/$batchId"
+    val fs = tableFs
+    val marker = new Path(s"$appliedDir/$batchId")
     // a batch already folded into the base has no marker anymore — the
     // commit record refuses its replay instead
-    if (batchId > commitState(fs)._2 && !fs.exists(new Path(marker))) {
+    if (batchId > commitState(fs)._2 && !fs.exists(marker)) {
       val dir = batchDir(batchId)
       fs.delete(new Path(dir), true)
       val files = writeParts(batch, dir)
-      val staged = s"$dir/_marker"
-      IndexFs.createMarker(fs, staged, files.mkString("\n"), overwrite = true)
-      IndexFs.rename(fs, staged, marker)
+      val staged = new Path(s"$dir/_marker")
+      val out = fs.create(staged, true)
+      try out.write(files.mkString("\n").getBytes("UTF-8")) finally out.close()
+      fs.mkdirs(marker.getParent)
+      if (!fs.rename(staged, marker))
+        throw new java.io.IOException(
+          s"ParquetGraphSink.merge: could not move $staged to $marker")
     }
   }
 
@@ -175,17 +186,19 @@ final class ParquetGraphSink(tablePath: String) extends Serializable {
         s"`$c`, and has ${found.size} among ${fields.map(_.name).mkString(", ")}")
       found.head
     }
-    val direct = ordinals == fields.indices
     val schema = org.apache.spark.sql.types.StructType(ordinals.map(fields))
     val job = Job.getInstance(spark.sessionState.newHadoopConf())
     // staging files: compact() reads each once and rebuilds dictionaries
     job.getConfiguration.setBoolean(ParquetOutputFormat.ENABLE_DICTIONARY, false)
     val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
     val conf = shipConf(sc, job.getConfiguration)
-    // a foreachBatch batch is a LogicalRDD over the micro-batch's own RDD
-    val rows = batch.queryExecution.analyzed match {
-      case micro: org.apache.spark.sql.execution.LogicalRDD => micro.rdd
-      case _ => batch.queryExecution.toRdd
+    // an uncached foreachBatch batch is a LogicalRDD over the micro-batch's
+    // own RDD; a cached batch, or any other DataFrame, plans the four columns
+    val plan = batch.queryExecution.analyzed
+    val (rows, cols) = batch.queryExecution.withCachedData match {
+      case micro: org.apache.spark.sql.execution.LogicalRDD => (micro.rdd, ordinals)
+      case _ => (spark.sessionState.executePlan(Project(ordinals.map(plan.output), plan))
+        .toRdd, ordinals.indices.toVector)
     }
     val rdd = if (rows.getNumPartitions > 0) rows else sc.parallelize(Seq.empty[InternalRow], 1)
     sc.runJob(rdd,
@@ -199,10 +212,8 @@ final class ParquetGraphSink(tablePath: String) extends Serializable {
             factory.getFileExtension(attempt)
           val out = factory.newInstance(s"$dir/$name", schema, attempt)
           // the writer reads the four columns through a zero-copy view
-          val view = ProjectingInternalRow(schema, ordinals)
-          val write: InternalRow => Unit =
-            if (direct) out.write else r => { view.project(r); out.write(view) }
-          try it.foreach(write)
+          val view = ProjectingInternalRow(schema, cols)
+          try it.foreach { r => view.project(r); out.write(view) }
           catch { case t: Throwable =>
             try out.close() catch { case c: Throwable => t.addSuppressed(c) }
             throw t
@@ -235,7 +246,7 @@ final class ParquetGraphSink(tablePath: String) extends Serializable {
 
   /** Batch ids durably applied and not yet folded into the base. */
   def appliedBatchIds: Seq[Long] = {
-    val through = commitState()._2
+    val through = commitState(tableFs)._2
     IndexFs.list(appliedDir)
       .map(_.getPath.getName.toLong)
       .filter(_ > through).toSeq.sorted
@@ -246,7 +257,7 @@ final class ParquetGraphSink(tablePath: String) extends Serializable {
     * every step (see class doc). No-op when nothing new is applied
     * (still reaps leftovers of a previously interrupted cleanup). */
   def compact(spark: SparkSession, protect: Set[Long] = Set.empty): Unit = {
-    val (gen, through) = commitState()
+    val (gen, through) = commitState(tableFs)
     cleanup(gen, through, protect)
     val applied = appliedBatchIds
     if (applied.isEmpty) return
@@ -288,7 +299,7 @@ final class ParquetGraphSink(tablePath: String) extends Serializable {
     * snapshot pins retrieval AND graph context at one instant — the
     * knowledge-graph RAG serving cut. */
   def leg(): graft.operators.ServingSnapshot.Leg = {
-    val (gen, _) = commitState()
+    val (gen, _) = commitState(tableFs)
     require(gen > 0, s"ParquetGraphSink.leg: nothing compacted under " +
       s"$tablePath yet — compact() before publishing a snapshot")
     val unfolded = appliedBatchIds
@@ -330,7 +341,7 @@ final class ParquetGraphSink(tablePath: String) extends Serializable {
     * of unfolded batches list, same TripleStore logic as the batch
     * surface. */
   def graph(spark: SparkSession): (DataFrame, DataFrame) = {
-    val (gen, _) = commitState()
+    val (gen, _) = commitState(tableFs)
     val ids = appliedBatchIds
     require(gen > 0 || ids.nonEmpty, s"no applied batches under $tablePath")
     val t = committed(spark, gen, ids)

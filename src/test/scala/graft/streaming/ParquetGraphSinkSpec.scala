@@ -374,6 +374,44 @@ class ParquetGraphSinkSpec extends AnyFunSuite with SparkFixture {
     }
   }
 
+  test("a batch persisted inside foreachBatch is written from its cached rows: " +
+    "the micro-batch is computed once for merge and a second consumer") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val tablePath = java.nio.file.Files.createTempDirectory("graft_sink_c").toString
+    // counts every evaluation of the upstream column, so a recomputed
+    // micro-batch shows as twice its rows
+    val evaluated = spark.sparkContext.longAccumulator("graft.spec.subjects")
+    val subject = udf { (i: Long) => evaluated.add(1); s"s${i % 9}" }.asNondeterministic()
+    val sink = new ParquetGraphSink(tablePath)
+    val counted = scala.collection.concurrent.TrieMap.empty[Long, Long]
+    def onBatch(batch: org.apache.spark.sql.DataFrame, id: Long): Unit = {
+      batch.persist()
+      try {
+        sink.merge(batch, id)
+        counted(id) = batch.count()
+      } finally { batch.unpersist(); () }
+    }
+    try {
+      val input = MemoryStream[Long]
+      val q = input.toDF().toDF("ts_us")
+        .select(subject(col("ts_us")).as("subject"), lit("knows").as("predicate"),
+          concat(lit("o"), (col("ts_us") % 5).cast("string")).as("object"), col("ts_us"))
+        .writeStream.foreachBatch(onBatch _).start()
+      try (0 until 2).foreach { b =>
+        input.addData((0 until 50).map(i => b * 50L + i))
+        q.processAllAvailable()
+      } finally q.stop()
+      assert(counted == Map(0L -> 50L, 1L -> 50L))
+      assert(evaluated.sum == 100, s"the upstream column ran ${evaluated.sum} times for " +
+        "100 records: merge recomputed the persisted micro-batch")
+      val (_, edges) = sink.graph(spark)
+      assert(edges.collect().map(_.getLong(3)).sum == 100)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tablePath))
+    }
+  }
+
   test("merge finds the four columns by name: another order and extra columns " +
     "store the same rows, and a missing column fails by its name") {
     import spark.implicits._
