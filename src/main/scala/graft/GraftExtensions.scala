@@ -6,7 +6,10 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Session extensions registering graft's native expressions for SQL
-  * use ([[GraftSession]] registers them for every graft main):
+  * use, the as-of join's parser, rules and strategy, and the
+  * [[graft.plans.CollectSortStrategy]] that sorts a small collected
+  * ORDER BY on the driver, within `spark.sql.autoBroadcastJoinThreshold`
+  * ([[GraftSession]] registers them for every graft main):
   *
   * {{{
   *   builder.config("spark.sql.extensions", "graft.GraftExtensions")
@@ -56,6 +59,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       }))
     // plans graft.plans.AsOfJoin logical nodes (built by graft.plans.AsOf)
     ext.injectPlannerStrategy(_ => new graft.plans.AsOfJoinStrategy)
+    // a collected global ORDER BY whose child is within
+    // spark.sql.autoBroadcastJoinThreshold sorts on the driver
+    // (graft.plans.CollectSortExec); -1 keeps Spark's range sort
+    ext.injectPlannerStrategy(_ => graft.plans.CollectSortStrategy)
     // pushes left-only filters below AsOfJoin (Catalyst's own pushdown
     // rules don't know the custom node)
     ext.injectOptimizerRule(_ => graft.plans.PushFilterThroughAsOfJoin)

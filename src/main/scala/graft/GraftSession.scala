@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one engine every graft main runs on (Bench, Verify, PlanDump,
-  * JobTrace): a dev tool that measured a differently-configured session
+/** The one engine every graft main runs on (Bench, Verify, JobTrace,
+  * and the dev mains under `src/test`: PlanDump, SmallBatchLoop): a dev
+  * tool that measured a differently-configured session
   * would explain a different engine from the one the bench and the
   * oracle gate grade.
   *

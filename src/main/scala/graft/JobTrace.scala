@@ -50,7 +50,9 @@ object JobTrace {
       // force analysis + optimization + physical planning (AQE root)
       df.queryExecution.executedPlan
       val t2 = System.nanoTime()
-      val n = df.count()
+      // collect, as a caller does: under a count() the optimizer drops
+      // the query's final ORDER BY, and with it the sort's jobs
+      val n = df.collect().length
       val sec = (System.nanoTime() - t0) / 1e9
       org.apache.spark.GraftCoreBridge.drainListenerBus(spark.sparkContext)
       println(f"== run $r: $name rows=$n wall=$sec%.3f s jobs=${out.size} " +

@@ -13,8 +13,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * error monitor] -> writeStream`, with watermarks replacing the manual
   * poll timeouts and state store replacing the hand-rolled SafeQueue
   * pipeline (`src/SafeQueue.h`). The decode is the batch codec verbatim:
-  * its mapPartitions is stateless, so one code path serves batches and
-  * micro-batches.
+  * its `DecodeFrames` generator is stateless, so one code path serves
+  * batches and micro-batches.
   */
 object AvroStream {
 

@@ -57,6 +57,12 @@ object GraftSqlBridge {
       .exists(_.cachedRepresentation.cacheBuilder.isCachedColumnBuffersLoaded)
   }
 
+  /** `block` with `spark` as the thread's active session — the
+    * `private[sql]` `withActive` QueryExecution wraps its phases in, so a
+    * plan node built at execution time gets the session the planner's
+    * nodes got. */
+  def withActive[T](spark: SparkSession)(block: => T): T = spark.withActive(block)
+
   /** Register graft's SQL functions on an ALREADY-RUNNING session (the
     * `spark.sql.extensions=graft.GraftExtensions` conf only applies to
     * sessions built with it). */

@@ -3,9 +3,11 @@ package graft
 /** Dev tool: print one or more declared queries' `.explain("formatted")`
   * to files — the optimization rounds' before/after plan evidence
   * (`plans/rNN/<query>_{before,after}.txt`). Not part of the bench or
-  * oracle surface.
+  * oracle surface, and not a spec, so the test suite does not run it.
   *
-  * Usage: tools/run.sh graft.PlanDump <outDir> <suffix> <query> [query...]
+  * Run it after `sbt Test/compile` with the `java` line of
+  * `tools/run.sh`, adding `target/scala-2.13/test-classes` to its class
+  * path: `graft.PlanDump <outDir> <suffix> <query> [query...]`.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {

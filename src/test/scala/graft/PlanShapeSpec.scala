@@ -45,6 +45,24 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
     assert(p.contains("TakeOrderedAndProject"), p.take(1500))
   }
 
+  test("a collected small ORDER BY sorts on the driver: CollectSort at the root, no range shuffle") {
+    Seq("text_tokens", "deser_error_count").foreach { name =>
+      val df = SparkEntry.queries(name)(spark, dir)
+      df.collect()
+      val root = df.queryExecution.executedPlan match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+          a.executedPlan match {
+            case r: org.apache.spark.sql.execution.adaptive.ResultQueryStageExec => r.plan
+            case p => p
+          }
+        case p => p
+      }
+      val p = df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+      assert(root.isInstanceOf[graft.plans.CollectSortExec], s"$name:\n$p")
+      assert(!p.contains("rangepartitioning"), s"$name:\n$p")
+    }
+  }
+
   test("anti and semi joins stay joins (no subquery re-execution)") {
     assert(plan("q_parts_not_ordered").contains("LeftAnti"))
     assert(plan("q_order_priority").contains("LeftSemi"))
